@@ -27,6 +27,7 @@ def main():
     from kgce import pipeline, tagging
     from kgce.operators import decontam as dc
     from kgce.operators import linking, sampling
+    from kgce.plans.stage import checkpoint
     from kgce.session import get_spark
 
     spark = get_spark("kgce-probe", cores=cores, shuffle_partitions=max(cores, 8))
@@ -109,7 +110,7 @@ def main():
         out["n_mentions"] = mentions.count()
         vocab = linking.entity_vocab(mentions)
         out["n_vocab"] = vocab.count()
-        signed = linking._checkpoint(linking.minhash_signatures(vocab))
+        signed = checkpoint(linking.minhash_signatures(vocab))
         timed("banded_counts", lambda: signed.select(
             "entity_key").limit(1), action=None)
         cands = linking.candidate_pairs_lsh(signed, materialize=False)

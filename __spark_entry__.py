@@ -27,6 +27,7 @@ from kgce.operators import ann, dedup, packing, pii, ruletag, sampling, textstat
 from kgce.operators import linking as linking_ops
 from kgce.operators import triples as triples_ops
 from kgce.operators.ruletag import mentions_sql
+from kgce.plans.stage import checkpoint
 
 
 _SHIPPED: set[int] = set()
@@ -96,7 +97,7 @@ def q_mention_pair_preds(spark, sf):
     # fused forms) — but off a MATERIALIZED mention table: the two
     # renamed projections defeat exchange reuse, so the lazy form ran
     # the document_mentions window chain once per join side
-    m = linking_ops._checkpoint(
+    m = checkpoint(
         ruletag.document_mentions(_t(spark, sf, "documents"))
     )
     a = m.select("doc_id", F.col("tok_s").alias("s_a"), F.col("mtype").alias("t_a"))
@@ -109,7 +110,7 @@ def q_mention_pair_preds(spark, sf):
 
 def q_triples_agg(spark, sf):
     # materialized once for the same reason as q_mention_pair_preds
-    m = linking_ops._checkpoint(
+    m = checkpoint(
         ruletag.document_mentions(_t(spark, sf, "documents"))
     )
     a = m.select("doc_id", F.col("tok_s").alias("s_a"), F.col("mention_text").alias("subj_text"), F.col("mtype").alias("t_a"))
@@ -836,8 +837,8 @@ def bench_recrawl_maintain(spark, sf):
     )
     key = (id(spark.sparkContext), sf)
     if key not in _RECRAWL_PREV:
-        contribs = delta_ops.scored_contributions(old).localCheckpoint(eager=True)
-        agg = triples_ops.aggregate_triples(contribs).localCheckpoint(eager=True)
+        contribs = checkpoint(delta_ops.scored_contributions(old))
+        agg = checkpoint(triples_ops.aggregate_triples(contribs))
         _RECRAWL_PREV[key] = (agg, contribs)
     prev_agg, prev_contribs = _RECRAWL_PREV[key]
     new_agg, _ = delta_ops.maintain_snapshot(prev_agg, prev_contribs, old, new)
@@ -880,10 +881,8 @@ def _kg_edges(spark, sf):
             "text",
             "lang",
         )
-        _KG_EDGES[key] = (
-            pipeline.run(pages)["edges"]
-            .select("subj_id", "pred", "obj_id")
-            .localCheckpoint(eager=True)
+        _KG_EDGES[key] = checkpoint(
+            pipeline.run(pages)["edges"].select("subj_id", "pred", "obj_id")
         )
     return _KG_EDGES[key]
 

@@ -53,13 +53,7 @@ HEADLINE = [
 # forms are exact all-pairs (max_df=None) and the synthetic corpus's
 # shared filler vocabulary makes that quadratic (158s/50s at sf0.01);
 # they exist to grade VALUES, the scale path is the max_df-guarded /
-# LSH-blocked form already benched via near_dup_groups.  Also excluded:
-# BGP pattern queries (operators/bgp.py) — the synthetic KG collapses to
-# ~5 hub subjects per predicate (measured), so variable-variable joins
-# are either degenerate-quadratic (45M bindings at sf0.01) or pure
-# fixed overhead; the operator's scale shape is pinned by the
-# PushedFilters/no-recompute plan tests in test_bgp and the PLANS.md
-# kg_bgp audit instead.
+# LSH-blocked form already benched via near_dup_groups.
 EXTENDED = [
     "pipeline_full_prov",
     "structured_triples",

@@ -50,6 +50,7 @@ def profile_pipeline(spark, sf_dir):
     from kgce import pipeline, tagging
     from kgce.operators import linking, sampling
     from kgce.operators import triples as triples_ops
+    from kgce.plans.stage import checkpoint
 
     out: dict = {}
     docs = entry._t(spark, sf_dir, "documents")
@@ -87,18 +88,18 @@ def profile_pipeline(spark, sf_dir):
         boilerplate_min_df=3, eval_docs=ev, decontam_n=8), out)
 
     # materialize cleaned so downstream stage timings are their own
-    cleaned = cleaned.localCheckpoint(eager=True)
+    cleaned = checkpoint(cleaned)
 
     mentions = _timed(
         spark, "mentions:extract+checkpoint",
-        lambda: linking._checkpoint(tagging.extract_mentions(cleaned)),
-        out, action=None,  # _checkpoint is eager already
+        lambda: checkpoint(tagging.extract_mentions(cleaned)),
+        out, action=None,  # checkpoint is eager already
     )
 
     # ---- canonicalize sub-stages ----
     signed = _timed(
         spark, "canon:vocab+minhash+checkpoint",
-        lambda: linking._checkpoint(
+        lambda: checkpoint(
             linking.minhash_signatures(linking.entity_vocab(mentions))
         ),
         out, action=None,

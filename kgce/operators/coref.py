@@ -42,7 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .linking import _checkpoint, normalize_text
+from ..plans.stage import checkpoint
+from .linking import normalize_text
 
 # RE2-safe (no backrefs/lookaround): capitalized multi-word name followed
 # by a parenthesized all-caps token.  Java and RE2 agree on this subset.
@@ -106,7 +107,7 @@ def suffix_alias_pairs(
     # an unmaterialized UDF plan each side would re-run the tagger (the
     # CLAUDE.md multi-consumer trap) — materialize the distinct-surfaces
     # projection once
-    surfaces = _checkpoint(
+    surfaces = checkpoint(
         mentions.select(
             "url", "type", normalize_text(F.col("text")).alias("norm")
         ).distinct()
@@ -179,7 +180,7 @@ def canonicalize_with_aliases(
     Returns the same (norm, entity_key, canonical_id) contract."""
     from . import linking
 
-    signed = linking._checkpoint(
+    signed = checkpoint(
         linking.minhash_signatures(linking.entity_vocab(mentions))
     )
     fuzzy = linking.verified_pairs(signed, threshold).select("a", "b")
@@ -223,7 +224,7 @@ def sense_split(mentions: DataFrame) -> DataFrame:
 
     # three consumers (both self-join sides + the keyed output join) —
     # materialize once so a UDF-derived mentions plan never re-runs
-    surf = _checkpoint(
+    surf = checkpoint(
         mentions.select("url", normalize_text(F.col("text")).alias("norm"))
         .filter(F.length("norm") > 0)
         .distinct()

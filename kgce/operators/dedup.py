@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.stage import checkpoint
+
 
 def normalize_doc(col) -> "F.Column":
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
@@ -272,7 +274,7 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Candidate near-dup pairs from shared LSH buckets (a < b).
 
-    The band-bucket table is materialized (localCheckpoint) before the
+    The band-bucket table is materialized (plans.stage.checkpoint) before the
     self-join: a broadcast build side defeats ReusedExchange, so without
     this the whole shingle->minhash pipeline executes TWICE (verified in
     the round-1 live plan).  Post-checkpoint the join reads the tiny
@@ -285,7 +287,7 @@ def minhash_lsh_pairs(
     their other (more selective) bands, which is where true near-dups
     agree anyway.  Default None = exact oracle behavior.
     """
-    bb = minhash_band_buckets(docs, **kw).localCheckpoint(eager=True)
+    bb = checkpoint(minhash_band_buckets(docs, **kw))
     if max_bucket_size is not None:
         small = (
             bb.groupBy("band_id", "bucket")
@@ -517,6 +519,9 @@ def near_dup_groups(
         # minhash_lsh_pairs emits (a < b) + distinct; the 1:1 shingle
         # joins and the Jaccard filter preserve both, and so does the
         # long cast of integral ids — skip CC's re-canonicalization.
+        # Precondition: ``id_col`` is unique per row.  A repeated id
+        # makes the shingle joins 1:k, so the pairs are no longer
+        # distinct and one id stands for two different texts.
         # (The xxhash64 branch below must NOT skip it: hashing preserves
         # neither the a < b order nor, under collision, loop-freeness.)
         comps = connected_components(

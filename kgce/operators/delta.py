@@ -114,14 +114,14 @@ def incremental_update(
     kept_contribs = prev_contribs.join(drop_urls, "url", "left_anti")
     contribs = kept_contribs.unionByName(new_contribs)
 
-    from .linking import _checkpoint
+    from ..plans.stage import checkpoint
 
     # the affected-key set is consumed by BOTH the keep anti-join and
     # the redo semi-join; unmaterialized, each consumer re-runs the
     # old_touched semi-join over the whole contribution store (and the
     # delta extraction when new_contribs is lazy).  O(delta keys) —
     # delta-proportional, never corpus-proportional.
-    affected = _checkpoint(
+    affected = checkpoint(
         old_touched.select(*TRIPLE_KEYS)
         .unionByName(new_contribs.select(*TRIPLE_KEYS))
         .distinct()
@@ -158,17 +158,17 @@ def maintain_snapshot(
     extraction, pre-aggregation)."""
     if extract_fn is None:
         extract_fn = scored_contributions
-    from .linking import _checkpoint
+    from ..plans.stage import checkpoint
 
     # delta is consumed by select_recrawl AND dropped_urls (whose output
     # feeds two more joins) — unmaterialized, the full-outer digest join
     # over both snapshots re-executes per consumer.  O(urls) rows of
     # (url, change).
-    delta = _checkpoint(snapshot_delta(old_pages, new_pages))
+    delta = checkpoint(snapshot_delta(old_pages, new_pages))
     # the re-extraction UDF output is consumed by the contribution-store
     # union AND the affected-key build; materialize so the tagger runs
     # on the delta exactly once.  O(delta pages x pairs-per-page).
-    new_contribs = _checkpoint(extract_fn(select_recrawl(new_pages, delta)))
+    new_contribs = checkpoint(extract_fn(select_recrawl(new_pages, delta)))
     return incremental_update(
         prev_agg, prev_contribs, new_contribs, dropped_urls(delta)
     )

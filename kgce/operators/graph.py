@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .linking import _checkpoint
+from ..plans.stage import checkpoint
 
 
 def canonical_edges(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
@@ -83,7 +83,7 @@ def triangle_stats(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     # edge count, closure probe); when it derives from an upstream UDF /
     # join pipeline an unmaterialized fork re-runs that pipeline per
     # consumer (the CLAUDE.md multi-consumer trap) — checkpoint once
-    e = _checkpoint(canonical_edges(edges, a, b))
+    e = checkpoint(canonical_edges(edges, a, b))
     sym = e.select(F.col("lo").alias("node")).unionAll(
         e.select(F.col("hi").alias("node"))
     )
@@ -95,7 +95,7 @@ def triangle_stats(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     lo_first = F.struct(F.col("_dl").alias("d"), F.col("lo").alias("n")) < F.struct(
         F.col("_dh").alias("d"), F.col("hi").alias("n")
     )
-    o = _checkpoint(
+    o = checkpoint(
         ranked.select(
             F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
             F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("v"),
@@ -174,7 +174,7 @@ def label_propagation(
     cross-engine exactness (the co-occurrence counts are).
     """
     if weight is None:
-        e = _checkpoint(canonical_edges(edges, a, b))
+        e = checkpoint(canonical_edges(edges, a, b))
         sym = e.unionAll(e.select(F.col("hi").alias("lo"), F.col("lo").alias("hi")))
         # persisted PRE-PARTITIONED by node: hash(node) satisfies the
         # clustered distribution of BOTH per-round aggregations
@@ -200,7 +200,7 @@ def label_propagation(
             .groupBy("lo", "hi")
             .agg(F.sum("w").alias("w"))
         )
-        und = _checkpoint(und)
+        und = checkpoint(und)
         sym = und.unionAll(
             und.select(F.col("hi").alias("lo"), F.col("lo").alias("hi"), "w")
         )
@@ -209,8 +209,9 @@ def label_propagation(
             .repartition("node")  # same zero-shuffle-rounds rationale as above
             .persist()
         )
-    labels = sym.select("node").distinct().withColumn("label", F.col("node"))
-    labels = labels.localCheckpoint(eager=True)
+    labels = checkpoint(
+        sym.select("node").distinct().withColumn("label", F.col("node"))
+    )
     for _ in range(iterations):
         nbr_labels = sym.join(
             labels.select(F.col("node").alias("nbr"), "label"), "nbr"
@@ -219,13 +220,13 @@ def label_propagation(
         best = counted.groupBy("node").agg(
             F.min(F.struct((-F.col("n")).alias("neg_n"), F.col("label"))).alias("_b")
         )
-        labels = (
+        # O(nodes); truncates lineage per round
+        labels = checkpoint(
             labels.select("node", F.col("label").alias("_old"))
             .join(best, "node", "left")
             .select(
                 "node", F.coalesce(F.col("_b.label"), F.col("_old")).alias("label")
             )
-            .localCheckpoint(eager=True)  # O(nodes); truncates lineage per round
         )
     sym.unpersist()
     return labels
@@ -247,7 +248,7 @@ def k_core(edges: DataFrame, k: int, a: str = "a", b: str = "b") -> DataFrame:
     depth (the longest chain of cascading removals), which is tiny on
     real graphs — and each round's cost shrinks with the graph.
     """
-    e = _checkpoint(canonical_edges(edges, a, b))
+    e = checkpoint(canonical_edges(edges, a, b))
     n_edges = e.count()
     while n_edges:
         deg = (
@@ -257,7 +258,7 @@ def k_core(edges: DataFrame, k: int, a: str = "a", b: str = "b") -> DataFrame:
             .agg(F.count("*").alias("d"))
         )
         keep = deg.filter(F.col("d") >= k).select("node")
-        nxt = _checkpoint(
+        nxt = checkpoint(
             e.join(keep.withColumnRenamed("node", "lo"), "lo", "left_semi").join(
                 keep.withColumnRenamed("node", "hi"), "hi", "left_semi"
             ).select("lo", "hi")
@@ -306,7 +307,7 @@ def modularity(
             .groupBy("lo", "hi")
             .agg(F.sum("w").alias("w"))
         )
-    und = _checkpoint(und)
+    und = checkpoint(und)
     m = und.agg(F.sum("w").alias("m")).first()["m"]
     if not m:
         return edges.sparkSession.createDataFrame(

@@ -49,7 +49,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .linking import _checkpoint
+from ..plans.stage import checkpoint
 
 __all__ = ["init_embeddings", "train_transe", "entity_vectors_for_ann"]
 
@@ -231,8 +231,8 @@ def train_transe(
         .select("subj_id", "pred", "obj_id")
         .distinct()
     )
-    triples = _checkpoint(triples)
-    entities = _checkpoint(_entity_ids(triples))
+    triples = checkpoint(triples)
+    entities = checkpoint(_entity_ids(triples))
     n_entities = entities.count()
     if n_entities == 0:
         raise ValueError("no entity-object edges to train on")
@@ -240,9 +240,9 @@ def train_transe(
 
     def _maybe_warm(cold: DataFrame, warm: DataFrame | None, key: str) -> DataFrame:
         if warm is None:
-            return _checkpoint(cold)
+            return checkpoint(cold)
         w = warm.select(key, F.col("vec").alias("_warm_vec"))
-        return _checkpoint(
+        return checkpoint(
             cold.join(w, key, "left").select(
                 key, F.coalesce("_warm_vec", "vec").alias("vec")
             )
@@ -284,7 +284,7 @@ def train_transe(
         # one materialization serves BOTH the loss scalar and the
         # gradient pass (unmaterialized forks re-run the 4-join subtree
         # per consumer — the CLAUDE.md trap); O(|triples|) rows, narrow
-        scored = _checkpoint(scored)
+        scored = checkpoint(scored)
         tot, n_scored = scored.agg(F.sum("hinge"), F.count(F.lit(1))).first()
         n_scored = max(n_scored or 0, 1)
         losses.append((tot or 0.0) / n_scored)
@@ -294,10 +294,10 @@ def train_transe(
         # mean keeps the step scale-free in corpus size
         step = lr / n_scored
         grads = _grad_rows(scored)
-        ent_emb = _checkpoint(
+        ent_emb = checkpoint(
             _apply_grads(ent_emb, grads, F.col("id").cast("string"), step, renorm=True)
         )
-        rel_emb = _checkpoint(
+        rel_emb = checkpoint(
             _apply_grads(
                 rel_emb, grads, F.concat(F.lit("p:"), F.col("pred")), step, renorm=False
             )

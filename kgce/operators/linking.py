@@ -23,17 +23,10 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.stage import checkpoint
+
 DEFAULT_NUM_HASHES = 12
 DEFAULT_BANDS = 4  # 4 bands x 3 rows
-
-
-def _checkpoint(df: DataFrame) -> DataFrame:
-    """Reliable checkpoint when a checkpoint dir is configured (cluster
-    mode: survives executor loss), localCheckpoint otherwise (local mode:
-    lineage cut without requiring a dir)."""
-    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
 
 
 def normalize_text(col) -> "F.Column":
@@ -102,7 +95,7 @@ def candidate_pairs_lsh(
     False only if the caller already materialized it.
     """
     if materialize:
-        signed = _checkpoint(signed)
+        signed = checkpoint(signed)
     rows = num_hashes // bands
     band_cols = F.array(
         *[
@@ -339,9 +332,11 @@ def connected_components(
     # (a < b), distinct and self-loop-free (verified_pairs output is,
     # by construction: pairs are generated with a < b and deduped) —
     # skipping the re-canonicalization saves one full exchange +
-    # aggregation over the edge set.
+    # aggregation over the edge set.  Edges with a NULL id carry no
+    # link (the canonicalizing branch drops them as self-loops), so the
+    # shortcut drops them with one narrow filter.
     if assume_canonical:
-        und = edges.select(F.col("a").alias("lo"), F.col("b").alias("hi"))
+        und = edges.select(F.col("a").alias("lo"), F.col("b").alias("hi")).dropna()
     else:
         und = (
             edges.select(
@@ -350,7 +345,7 @@ def connected_components(
             .filter(F.col("lo") != F.col("hi"))
             .distinct()
         )
-    e = _checkpoint(und)
+    e = checkpoint(und)
     if small_graph_threshold:
         if e.count() <= small_graph_threshold:
             # Arrow collect (toPandas), not .collect(): 10-100x cheaper
@@ -409,7 +404,7 @@ def connected_components(
             .filter(F.col("lo") != F.col("hi"))
             .distinct()
         )
-        e2 = _checkpoint(e2)  # cut iterative lineage
+        e2 = checkpoint(e2)  # cut iterative lineage
         # ONE cheap action per round: the edge-set fingerprint (count +
         # xor-hash) over the just-checkpointed blocks replaces the round-1
         # double-exceptAll probe — star contraction is monotone, so an
@@ -491,7 +486,7 @@ def canonicalize(mentions: DataFrame, threshold: float = 0.6) -> DataFrame:
     # is checkpointed here and every downstream consumer — band explode,
     # bucket counts, payload re-attach, and the final membership join —
     # reads the materialized blocks instead of re-running the pipeline.
-    signed = _checkpoint(minhash_signatures(entity_vocab(mentions)))
+    signed = checkpoint(minhash_signatures(entity_vocab(mentions)))
     edges = verified_pairs(signed, threshold)
     # verified_pairs emits (a < b), distinct, self-loop-free rows — the
     # CC re-canonicalization pass (one exchange + agg over the edge
@@ -545,7 +540,7 @@ def blocking_quality(
         )
         < sample_permille
     )
-    signed = _checkpoint(minhash_signatures(vocab, num_hashes=num_hashes))
+    signed = checkpoint(minhash_signatures(vocab, num_hashes=num_hashes))
     n_sampled = signed.count()
     x = signed.select(
         F.col("entity_key").alias("a"), F.col("shingles").alias("sh_a")
@@ -555,13 +550,13 @@ def blocking_quality(
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    true_pairs = _checkpoint(
+    true_pairs = checkpoint(
         x.join(y, F.col("a") < F.col("b"))
         .withColumn("jaccard", inter / union)
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b")
     )
-    cands = _checkpoint(
+    cands = checkpoint(
         candidate_pairs_lsh(
             signed, bands=bands, num_hashes=num_hashes, materialize=False
         ).select("a", "b")

@@ -251,14 +251,14 @@ def pagerank(
     the only driver-side data is one float per iteration.  Verified
     against a pure-Python power iteration (test_links.py).
     """
-    from .linking import _checkpoint
+    from ..plans.stage import checkpoint
 
     # materialize the edge projection ONCE: the node-distinct, the
     # out-degree aggregation and the normalized-edge join each consumed
     # the lazy input before (3 upstream executions of whatever produced
     # the edges — e.g. the whole link-extraction chain), and the
     # small-graph probe below needs a cheap count.
-    e = _checkpoint(edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")))
+    e = checkpoint(edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")))
     if small_graph_threshold and e.count() <= small_graph_threshold:
         # driver power iteration for vocabulary-scale graphs (host
         # graphs are ~10^1-10^8 nodes; below the bound the distributed
@@ -321,13 +321,13 @@ def pagerank(
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     prev = None
     for it in range(iters):
-        contribs = (
+        # O(nodes); truncates ALL lineage
+        contribs = checkpoint(
             norm_edges.join(
                 ranks.select(F.col("node").alias("_s"), "rank"), "_s"
             )
             .groupBy(F.col("_d").alias("node"))
             .agg(F.sum(F.col("rank") * F.col("_w")).alias("_in"))
-            .localCheckpoint(eager=True)  # O(nodes); truncates ALL lineage
         )
         # prev iteration's checkpoint is unreachable once the new one is
         # materialized (this iteration's ranks read only `contribs`)

@@ -114,7 +114,7 @@ def train_bigram_lm(
     persist for reuse across scoring runs — callers scoring multiple
     corpora against one model should ``.persist()`` them.
     """
-    from .linking import _checkpoint
+    from ..plans.stage import checkpoint
 
     stream = _token_stream(docs, id_col, text_col)
     words = stream.select(F.explode("_toks").alias("word"))
@@ -122,7 +122,7 @@ def train_bigram_lm(
     # joins at train time, two more per scoring pass, |V|); without
     # materialization each subtree re-runs the corpus-wide word count +
     # sort-limit — checkpoint the 4096-row table once
-    vocab = _checkpoint(
+    vocab = checkpoint(
         words.groupBy("word")
         .agg(F.count("*").alias("_c"))
         .orderBy(F.col("_c").desc(), F.col("word").asc())
@@ -142,7 +142,7 @@ def train_bigram_lm(
     # one corpus aggregation: the context counts are a vocabulary-scale
     # rollup of the bigram table (c1 = Σ_w2 c12 by definition), not a
     # second pass over the exploded pair stream
-    bigrams = _checkpoint(
+    bigrams = checkpoint(
         pairs.groupBy("w1", "w2").agg(F.count("*").cast("long").alias("c12"))
     )
     contexts = bigrams.groupBy("w1").agg(F.sum("c12").alias("c1"))

@@ -66,7 +66,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .linking import _checkpoint
+from ..plans.stage import checkpoint
 
 
 def _facts(edges: DataFrame, subj: str, pred: str, obj: str) -> DataFrame:
@@ -116,7 +116,7 @@ def mine_chain_rules(
     """
     if pca_direction not in ("subject", "auto"):
         raise ValueError(f"pca_direction must be 'subject' or 'auto': {pca_direction!r}")
-    t = _checkpoint(_facts(edges, subj, pred, obj))
+    t = checkpoint(_facts(edges, subj, pred, obj))
 
     # degree-cap the join endpoint: left side by (z=o, p1) in-fan,
     # right side by (z=s, p2) out-fan
@@ -130,7 +130,7 @@ def mine_chain_rules(
         ["z", "p2"],
         max_mid_degree,
     )
-    body = _checkpoint(
+    body = checkpoint(
         left.join(right, "z").select("p1", "p2", "x", "y").distinct()
     )
 
@@ -228,11 +228,11 @@ def infer_chain_facts(
     (it is small by construction, but corpus-derived — the same
     discipline as the canonical-entity map).
     """
-    t = _checkpoint(_facts(edges, subj, pred, obj))
+    t = checkpoint(_facts(edges, subj, pred, obj))
     # three consumers (two predicate restrictions + the rule join) and
     # the rule plan behind it is the whole mining pass — materialize the
     # tiny promoted-rule table once
-    rules = _checkpoint(
+    rules = checkpoint(
         mined_rules.filter(F.col("pca_confidence") >= min_pca_confidence).select(
             "p1", "p2", "head", "pca_confidence"
         )
@@ -290,7 +290,7 @@ def mine_implication_rules(
     (bounded by the predicate vocabulary, not the corpus).  p1 == head
     is excluded (trivially confidence-1).
     """
-    t = _checkpoint(_facts(edges, subj, pred, obj))
+    t = checkpoint(_facts(edges, subj, pred, obj))
     pairs = t.select(F.col("p").alias("p1"), "s", "o")
     fwd = pairs.join(
         t.select(F.col("p").alias("head"), "s", "o"), ["s", "o"]
@@ -343,7 +343,7 @@ def predicate_synonym_pairs(
     One self-join of the tiny fwd-rule table on the swapped key."""
     # the self-join's two sides would each re-run the mining pass on an
     # unmaterialized plan — materialize the tiny fwd-rule table once
-    fwd = _checkpoint(
+    fwd = checkpoint(
         mine_implication_rules(
             edges,
             subj,
@@ -392,13 +392,12 @@ def predicate_canonical_map(
     # two consumers of the pair table (both union branches) over a
     # possibly-unmaterialized mining plan — materialize once; the table
     # is vocabulary-sized
-    e = _checkpoint(synonym_pairs.select("a", "b"))
+    e = checkpoint(synonym_pairs.select("a", "b"))
     sym = e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).persist()
-    labels = (
+    labels = checkpoint(
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(max_rounds):
         nbr_min = (
@@ -406,7 +405,7 @@ def predicate_canonical_map(
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("label").alias("_nbr"))
         )
-        new = (
+        new = checkpoint(  # O(preds): vocabulary-sized
             labels.select("node", F.col("label").alias("_old"))
             .join(nbr_min, "node", "left")
             .select(
@@ -416,7 +415,6 @@ def predicate_canonical_map(
                 ),
                 F.col("_old"),
             )
-            .localCheckpoint(eager=True)  # O(preds): vocabulary-sized
         )
         changed = new.agg(
             F.sum((F.col("label") != F.col("_old")).cast("long")).alias("n")

@@ -1,12 +1,19 @@
 """End-to-end KG-construction pipeline (the north_star dataflow):
 
-pages ──mapInPandas──> mentions ──self-join──> scored pairs ──agg──> triples
+pages ──mapInPandas──> mentions ──per-sentence pairs──> scored pairs ──agg──> triples
                    └──> entity vocab ──MinHash-LSH──> edges ──CC──> canonical ids
 triples ⋈ canonical ids ──> (subj_id, pred, obj_id, ...) ──> nodes/edges tables
 
-Stage boundaries are exactly the checkpoint boundaries: run via
-``run_checkpointed`` each stage's output lands under the work dir with a
-per-bucket manifest, so a killed run resumes mid-stage.
+The dataflow is written once, in ``_compose``, over a stage store with
+``StageRunner``'s two methods: ``run(stage, df, transform, key)`` for a
+bucketable stage and ``run_global(stage, build, config)`` for one whose
+shuffle crosses any bucketing.  :func:`run` passes ``_InMemory``, which
+applies each stage lazily.  :func:`run_checkpointed` passes a
+``StageRunner``: each stage's output lands under the work dir with a
+per-bucket manifest, so a killed run resumes mid-stage.  The mention
+table feeds three consumers and goes through ``plans.stage.checkpoint``
+on both paths: the in-memory UDF output is materialized, the
+StageRunner's parquet read is already a leaf and stays a scan.
 """
 
 from __future__ import annotations
@@ -19,6 +26,58 @@ from .operators import linking
 from .operators import triples as triples_ops
 from .plans import materialize
 from .plans.lineage import StageRunner
+from .plans.stage import checkpoint
+
+# the canonical-edges schema shared by text and declared (JSON-LD) triples
+_EDGE_COLS = [
+    "subj_id",
+    "pred",
+    "obj_id",
+    "subj_text",
+    "obj_text",
+    "confidence",
+    "n_evidence",
+    "subj_type",
+    "obj_type",
+]
+
+
+def _edge_cols(provenance_k: int | None) -> list[str]:
+    return _EDGE_COLS + (["evidence_urls"] if provenance_k is not None else [])
+
+
+def _aggregate(scored: DataFrame, provenance_k: int | None) -> DataFrame:
+    if provenance_k is not None:
+        return triples_ops.aggregate_triples_with_provenance(scored, k=provenance_k)
+    return triples_ops.aggregate_triples(scored)
+
+
+def _with_canonical_ids(
+    trips: DataFrame, canon_map: DataFrame, provenance_k: int | None
+) -> DataFrame:
+    """Attach ``subj_id``/``obj_id`` from the (norm, canonical_id) map by
+    normalized surface form."""
+    subj = canon_map.withColumnRenamed("norm", "_subj_norm").withColumnRenamed(
+        "canonical_id", "subj_id"
+    )
+    obj = canon_map.withColumnRenamed("norm", "_obj_norm").withColumnRenamed(
+        "canonical_id", "obj_id"
+    )
+    # deliberately UNHINTED: an explicit broadcast hint OVERRIDES
+    # autoBroadcastJoinThreshold (there is no automatic fallback), and the
+    # normalized-surface-form vocabulary is corpus-proportional in the
+    # worst case — many GB at 10^12 pages, past the BroadcastExchange
+    # limit.  With AQE on (session.py) Spark broadcasts at RUNTIME when
+    # the built map measures small and shuffle-joins otherwise; the skew
+    # handling at this entity-linking join stays with AQE's skew-join
+    # splitting either way (tests/test_plans.py pins both regimes).
+    return (
+        trips.withColumn("_subj_norm", linking.normalize_text(F.col("subj_text")))
+        .withColumn("_obj_norm", linking.normalize_text(F.col("obj_text")))
+        .join(subj, "_subj_norm", "left")
+        .join(obj, "_obj_norm", "left")
+        .select(*_edge_cols(provenance_k))
+    )
 
 
 def canonical_triples(
@@ -36,48 +95,11 @@ def canonical_triples(
     aggregation — no extra corpus scan).
     """
     scored = triples_ops.score_pairs(triples_ops.candidate_pairs_grouped(mentions))
-    if provenance_k is not None:
-        trips = triples_ops.aggregate_triples_with_provenance(scored, k=provenance_k)
-    else:
-        trips = triples_ops.aggregate_triples(scored)
     if canon is None:
         canon = linking.canonicalize(mentions, threshold=threshold)
-    canon_map = canon.select("norm", "canonical_id")
-    subj = canon_map.withColumnRenamed("norm", "_subj_norm").withColumnRenamed(
-        "canonical_id", "subj_id"
+    return _with_canonical_ids(
+        _aggregate(scored, provenance_k), canon.select("norm", "canonical_id"), provenance_k
     )
-    obj = canon_map.withColumnRenamed("norm", "_obj_norm").withColumnRenamed(
-        "canonical_id", "obj_id"
-    )
-    trips = (
-        trips.withColumn("_subj_norm", linking.normalize_text(F.col("subj_text")))
-        .withColumn("_obj_norm", linking.normalize_text(F.col("obj_text")))
-        .join(subj, "_subj_norm", "left")
-        .join(obj, "_obj_norm", "left")
-        .drop("_subj_norm", "_obj_norm")
-    )
-    # deliberately UNHINTED: an explicit broadcast hint OVERRIDES
-    # autoBroadcastJoinThreshold (there is no automatic fallback), and the
-    # normalized-surface-form vocabulary is corpus-proportional in the
-    # worst case — many GB at 10^12 pages, past the BroadcastExchange
-    # limit.  With AQE on (session.py) Spark broadcasts at RUNTIME when
-    # the built map measures small and shuffle-joins otherwise; the skew
-    # handling at this entity-linking join stays with AQE's skew-join
-    # splitting either way (tests/test_plans.py pins both regimes).
-    cols = [
-        "subj_id",
-        "pred",
-        "obj_id",
-        "subj_text",
-        "obj_text",
-        "confidence",
-        "n_evidence",
-        "subj_type",
-        "obj_type",
-    ]
-    if provenance_k is not None:
-        cols.append("evidence_urls")
-    return trips.select(*cols)
 
 
 def clean_pages(
@@ -187,9 +209,7 @@ def clean_pages(
         # trap) — materialize once.  In run_checkpointed the whole
         # stage output lands as parquet anyway; this protects direct
         # clean_pages()/run() callers.
-        from .operators.linking import _checkpoint
-
-        out = _checkpoint(out)
+        out = checkpoint(out)
     if boilerplate_min_df is not None:
         # key the strip by a (url, text) row key, NOT url: a url crawled
         # twice with different content yields two surviving rows after
@@ -221,16 +241,13 @@ def clean_pages(
         ).withColumnRenamed("doc_id", "_rk")
         out = out.drop("text").join(stripped2, "_rk").drop("_rk")
     if eval_docs is not None:
-        if boilerplate_min_df is not None or repeats_min_df is not None:
-            # decontaminate consumes `out` from TWO subtrees (the
-            # shingle-explode hit count + the flag rejoin); the earlier
-            # checkpoint covers only the pre-boilerplate prefix, so
-            # without this the boilerplate/repeats strip-and-rejoin
-            # would re-execute per consumer (the CLAUDE.md
-            # multi-consumer trap, measured ~2x the strip cost at sf1)
-            from .operators.linking import _checkpoint
-
-            out = _checkpoint(out)
+        # decontaminate consumes `out` from TWO subtrees (the
+        # shingle-explode hit count + the flag rejoin); after a
+        # boilerplate/repeats strip-and-rejoin this materializes it once
+        # (the CLAUDE.md multi-consumer trap, measured ~2x the strip cost
+        # at sf1); without one, `out` is still the checkpoint above and
+        # comes back unchanged
+        out = checkpoint(out)
         # key by the same md5(url, text) ROW key as the boilerplate strip
         # (ADVICE r3): a url crawled twice with different content keeps
         # two rows after the content-digest dedup, and a url-keyed pass
@@ -259,9 +276,8 @@ def clean_pages(
         # Row-keyed by md5(url, text) like every stage above: two
         # different-content crawls of one url score independently.
         from .operators.lmfilter import perplexity_filter
-        from .operators.linking import _checkpoint
 
-        out = _checkpoint(out).withColumn(
+        out = checkpoint(out).withColumn(
             "_rk", F.md5(F.concat_ws("\x00", F.col("url"), F.col("text")))
         )
         out = perplexity_filter(
@@ -293,9 +309,7 @@ def clean_pages(
             # `out` is about to be consumed by the token-count measure
             # AND the final filter — materialize the fork (the earlier
             # checkpoint covers only the pre-boilerplate prefix)
-            from .operators.linking import _checkpoint
-
-            out = _checkpoint(out)
+            out = checkpoint(out)
         w = mixing_weights(out, target_mix, strata_col=mix_strata_col)
         fracs = {r.stratum: float(r.keep_frac) for r in w.collect()}
         out = stratified_hash_sample(
@@ -307,33 +321,6 @@ def clean_pages(
             salt="mix",
         )
     return out
-
-
-def eval_set_fingerprint(ev: DataFrame) -> list[int]:
-    """[row_count, content_hash] resume fingerprint of an eval set.
-
-    XOR over plain row hashes cancels duplicate rows (x ^ x = 0), so two
-    different eval sets whose delta is a duplicated PAIR would collide
-    (ADVICE r3) — and a resumed run would silently reuse a stale cached
-    clean stage, the exact leakage decontamination exists to prevent.
-    Folding each distinct row's MULTIPLICITY into the hashed value makes
-    duplicates non-cancelling: adding a second copy of row r changes
-    xxhash64(r, 1) to xxhash64(r, 2), a different contribution.  One
-    groupBy over the (small) eval set; order-independent via bit_xor.
-    """
-    cols = [F.col(c) for c in ev.columns]
-    fp = (
-        ev.groupBy(*cols)
-        .agg(F.count(F.lit(1)).alias("_kgce_mult"))
-        .agg(
-            F.sum("_kgce_mult").alias("n"),
-            F.coalesce(
-                F.bit_xor(F.xxhash64(*cols, F.col("_kgce_mult"))), F.lit(0)
-            ).alias("h"),
-        )
-        .first()
-    )
-    return [int(fp.n or 0), int(fp.h)]
 
 
 def structured_canonical(
@@ -404,20 +391,97 @@ def structured_canonical(
         .withColumn("obj_id", F.lit(None).cast("long"))
         .drop("_sn", "_cid")
     )
-    cols = [
-        "subj_id",
-        "pred",
-        "obj_id",
-        "subj_text",
-        "obj_text",
-        "confidence",
-        "n_evidence",
-        "subj_type",
-        "obj_type",
-    ]
-    if provenance_k is not None:
-        cols.append("evidence_urls")
-    return out.select(*cols)
+    return out.select(*_edge_cols(provenance_k))
+
+
+class _InMemory:
+    """Stage store of :func:`run`: each stage is its transform, applied
+    lazily; nothing is written and no resume config is computed."""
+
+    def run(self, stage, df, transform, key="url"):
+        return transform(df)
+
+    def run_global(self, stage, build, config=None):
+        return build()
+
+
+def _compose(
+    store,
+    pages: DataFrame,
+    link_threshold: float,
+    clean: dict | None,
+    provenance_k: int | None,
+    structured: bool,
+    embed: dict | None,
+    aliases: dict | None,
+    infer: dict | None,
+) -> dict[str, DataFrame]:
+    """The pipeline dataflow over ``store`` (``_InMemory`` or a
+    ``StageRunner``); the options are :func:`run`'s."""
+    if clean is not None:
+        # GLOBAL stage: dedup/boilerplate document frequencies cross any
+        # bucketing, so the hygiene pass caches all-or-nothing.  A
+        # StageRunner pins eval_docs in the resume config by its
+        # fingerprint: a resumed run with a DIFFERENT eval set silently
+        # reusing the cached output would leak the new benchmark into
+        # training data — the exact failure decontamination prevents
+        raw_pages = pages
+        pages = store.run_global(
+            "clean_pages", lambda: clean_pages(raw_pages, **clean), config=clean
+        )
+    # mentions feed THREE consumers (triple chain, linking vocabulary,
+    # node building); unmaterialized, each re-runs the tagging UDF — a
+    # full corpus pass per consumer at crawl scale
+    mentions = checkpoint(store.run("mentions", pages, tagging.extract_mentions, key="url"))
+    scored = store.run(
+        "scored_pairs",
+        mentions,
+        lambda m: triples_ops.score_pairs(triples_ops.candidate_pairs_grouped(m)),
+        key="url",
+    )
+    # canonicalization (the iterative LSH + connected-components job) is
+    # a global stage: LSH pairs span buckets, and a resumed run skips it
+    if aliases is not None:
+        from .operators import coref
+
+        canon = store.run_global(
+            "canon",
+            lambda: coref.canonicalize_with_aliases(
+                mentions, pages, threshold=link_threshold, **aliases
+            ),
+            config={"threshold": link_threshold, "aliases": sorted(aliases.items())},
+        )
+    else:
+        canon = store.run_global(
+            "canon",
+            lambda: linking.canonicalize(mentions, threshold=link_threshold),
+            config={"threshold": link_threshold},
+        )
+    canon_map = canon.select("norm", "canonical_id")
+    trips = _with_canonical_ids(_aggregate(scored, provenance_k), canon_map, provenance_k)
+    if structured:
+        trips = trips.unionByName(structured_canonical(pages, canon_map, provenance_k))
+    nodes = materialize.build_nodes(canon, mentions)
+    edges = materialize.build_edges(trips)
+    if embed is not None:
+        from .operators.kgembed import entity_vectors_for_ann, train_transe
+
+        ent_emb, _rel_emb, _losses = train_transe(edges, **embed)
+        vecs = entity_vectors_for_ann(ent_emb).withColumnRenamed("id", "canonical_id")
+        # UNHINTED left join: the vector table is entity-vocabulary-scale
+        # (same order as nodes itself) — AQE picks the strategy
+        nodes = nodes.join(vecs, "canonical_id", "left")
+    out = {"mentions": mentions, "triples": trips, "nodes": nodes, "edges": edges}
+    if infer is not None:
+        from .operators import rules as rules_ops
+
+        mine_kw = {k: v for k, v in infer.items() if k in ("min_support", "max_mid_degree")}
+        apply_kw = {
+            k: v for k, v in infer.items() if k in ("min_pca_confidence", "max_mid_degree")
+        }
+        out["rules"] = rules_ops.mine_chain_rules(edges, **mine_kw)
+        out["inferred"] = rules_ops.infer_chain_facts(edges, out["rules"], **apply_kw)
+    return out
 
 
 def run(
@@ -453,62 +517,9 @@ def run(
     NEW (subj_id, pred, obj_id, confidence, n_rules) facts to the
     output — the Knowledge-Vault promotion loop; inferred facts are
     returned for curation, never silently merged into ``edges``."""
-    if clean is not None:
-        pages = clean_pages(pages, **clean)
-    # mentions feed THREE consumers (triple chain, linking vocabulary,
-    # node building); unmaterialized, each re-runs the tagging UDF —
-    # a full corpus pass per consumer at crawl scale.  run_checkpointed
-    # materializes this stage as parquet; the uncheckpointed path gets
-    # the same guarantee from a localCheckpoint.
-    mentions = linking._checkpoint(tagging.extract_mentions(pages))
-    if aliases is not None:
-        from .operators import coref
-
-        canon = coref.canonicalize_with_aliases(
-            mentions, pages, threshold=link_threshold, **aliases
-        )
-    else:
-        canon = linking.canonicalize(mentions, threshold=link_threshold)
-    trips = canonical_triples(
-        mentions, threshold=link_threshold, canon=canon, provenance_k=provenance_k
+    return _compose(
+        _InMemory(), pages, link_threshold, clean, provenance_k, structured, embed, aliases, infer
     )
-    if structured:
-        trips = trips.unionByName(
-            structured_canonical(
-                pages, canon.select("norm", "canonical_id"), provenance_k
-            )
-        )
-    nodes = materialize.build_nodes(canon, mentions)
-    edges = materialize.build_edges(trips)
-    if embed is not None:
-        from .operators.kgembed import entity_vectors_for_ann, train_transe
-
-        ent_emb, _rel_emb, _losses = train_transe(edges, **embed)
-        vecs = entity_vectors_for_ann(ent_emb).withColumnRenamed("id", "canonical_id")
-        # UNHINTED left join: the vector table is entity-vocabulary-scale
-        # (same order as nodes itself) — AQE picks the strategy
-        nodes = nodes.join(vecs, "canonical_id", "left")
-    out = {
-        "mentions": mentions,
-        "triples": trips,
-        "nodes": nodes,
-        "edges": edges,
-    }
-    if infer is not None:
-        from .operators import rules as rules_ops
-
-        mine_kw = {
-            k: v for k, v in infer.items() if k in ("min_support", "max_mid_degree")
-        }
-        apply_kw = {
-            k: v
-            for k, v in infer.items()
-            if k in ("min_pca_confidence", "max_mid_degree")
-        }
-        mined = rules_ops.mine_chain_rules(edges, **mine_kw)
-        out["rules"] = mined
-        out["inferred"] = rules_ops.infer_chain_facts(edges, mined, **apply_kw)
-    return out
 
 
 def run_checkpointed(
@@ -525,16 +536,13 @@ def run_checkpointed(
     aliases: dict | None = None,
     infer: dict | None = None,
 ) -> dict[str, DataFrame]:
-    """Resumable run: mention extraction and triple aggregation land under
-    ``work_dir`` with per-bucket manifests (kill/re-run safe).
-    ``provenance_k`` carries a bounded top-k ``evidence_urls`` column
-    through triples into the edges table (single-pass aggregation over
-    the checkpointed scored pairs — no extra corpus scan).
-    ``embed``/``aliases``/``infer`` mirror :func:`run`; the alias-aware
-    canonicalization replaces the same resumable "canon" global stage
-    (its manifest keys the whole cleaned corpus, so a resumed run reuses
-    it byte-identically), TransE training checkpoints per epoch
-    internally, and inference reads the materialized edge table.
+    """Resumable :func:`run` (same options, same tables) that writes the
+    nodes and edges tables under ``work_dir``.  Mention extraction and
+    pair scoring land there with per-bucket manifests (kill/re-run
+    safe); the hygiene pass and canonicalization (plain or alias-aware)
+    are all-or-nothing global stages keyed by their config, so a
+    resumed run reuses them byte-identically.  TransE training
+    checkpoints per epoch internally.
 
     ``salt_hot_domains`` pre-spreads Zipf-skewed crawls: pages are
     repartitioned by (domain, xxhash64(url) % n_salt) before the UDF
@@ -544,115 +552,14 @@ def run_checkpointed(
     """
     from .plans.skew import domain_of, salted_repartition
 
-    spark = pages.sparkSession
     if salt_hot_domains:
         pages = salted_repartition(pages, domain_of(F.col("url")), n_salt=n_salt)
-    runner = StageRunner(spark, work_dir, n_buckets=n_buckets)
-
-    if clean is not None:
-        # GLOBAL stage: dedup/boilerplate document frequencies cross any
-        # bucketing, so the hygiene pass caches all-or-nothing (eval_docs
-        # is a DataFrame — excluded from the resume-config fingerprint)
-        clean_cfg = {k: v for k, v in clean.items() if not isinstance(v, DataFrame)}
-        ev = clean.get("eval_docs")
-        if ev is not None:
-            # the eval set must be part of the resume fingerprint: a
-            # resumed run with a DIFFERENT eval set silently reusing the
-            # cached clean output would leak the new benchmark into
-            # training data — the exact failure decontamination prevents
-            clean_cfg["eval_docs_fingerprint"] = eval_set_fingerprint(ev)
-        raw_pages = pages
-        pages = runner.run_global(
-            "clean_pages", lambda: clean_pages(raw_pages, **clean), config=clean_cfg
-        )
-    mentions = runner.run("mentions", pages, tagging.extract_mentions, key="url")
-    scored = runner.run(
-        "scored_pairs",
-        mentions,
-        lambda m: triples_ops.score_pairs(triples_ops.candidate_pairs(m)),
-        key="url",
+    runner = StageRunner(pages.sparkSession, work_dir, n_buckets=n_buckets)
+    out = _compose(
+        runner, pages, link_threshold, clean, provenance_k, structured, embed, aliases, infer
     )
-    # aggregation + linking are global (cross-bucket) stages; their inputs
-    # are the checkpointed outputs above, so a crash here re-reads parquet,
-    # not the raw corpus — and canonicalization (the expensive iterative
-    # LSH + connected-components job) is itself cached as a global stage,
-    # so a resumed run skips it entirely.
-    if provenance_k is not None:
-        trips = triples_ops.aggregate_triples_with_provenance(scored, k=provenance_k)
-    else:
-        trips = triples_ops.aggregate_triples(scored)
-    if aliases is not None:
-        from .operators import coref
-
-        alias_pages = pages
-        canon = runner.run_global(
-            "canon",
-            lambda: coref.canonicalize_with_aliases(
-                mentions, alias_pages, threshold=link_threshold, **aliases
-            ),
-            config={"threshold": link_threshold, "aliases": sorted(aliases.items())},
-        )
-    else:
-        canon = runner.run_global(
-            "canon",
-            lambda: linking.canonicalize(mentions, threshold=link_threshold),
-            config={"threshold": link_threshold},
-        )
-    canon_map = canon.select("norm", "canonical_id")
-    # unhinted for the same reason as canonical_triples: the canonical map
-    # can outgrow any broadcast limit at crawl scale, and a hint would
-    # force the broadcast regardless of autoBroadcastJoinThreshold.  AQE
-    # picks broadcast at runtime when the map is actually small.
-    trips = (
-        trips.withColumn("_sn", linking.normalize_text(F.col("subj_text")))
-        .withColumn("_on", linking.normalize_text(F.col("obj_text")))
-        .join(
-            canon_map.withColumnRenamed("norm", "_sn").withColumnRenamed("canonical_id", "subj_id"),
-            "_sn",
-            "left",
-        )
-        .join(
-            canon_map.withColumnRenamed("norm", "_on").withColumnRenamed("canonical_id", "obj_id"),
-            "_on",
-            "left",
-        )
-        .drop("_sn", "_on")
-    )
-    if structured:
-        # declared JSON-LD triples from the (checkpointed, cleaned)
-        # pages — a narrow scan, so a crash mid-union re-reads the
-        # cached clean_pages parquet, never the raw corpus
-        trips = trips.unionByName(
-            structured_canonical(pages, canon_map, provenance_k)
-        )
-    nodes = materialize.build_nodes(canon, mentions)
-    edges = materialize.build_edges(trips)
-    if embed is not None:
-        from .operators.kgembed import entity_vectors_for_ann, train_transe
-
-        ent_emb, _rel_emb, _losses = train_transe(edges, **embed)
-        vecs = entity_vectors_for_ann(ent_emb).withColumnRenamed("id", "canonical_id")
-        nodes = nodes.join(vecs, "canonical_id", "left")
-    materialize.write_nodes(nodes, work_dir)
-    materialize.write_edges(edges, work_dir)
-    out = {"mentions": mentions, "triples": trips, "nodes": nodes, "edges": edges}
-    if infer is not None:
-        from .operators import rules as rules_ops
-
-        mined = rules_ops.mine_chain_rules(
-            edges,
-            **{k: v for k, v in infer.items() if k in ("min_support", "max_mid_degree")},
-        )
-        out["rules"] = mined
-        out["inferred"] = rules_ops.infer_chain_facts(
-            edges,
-            mined,
-            **{
-                k: v
-                for k, v in infer.items()
-                if k in ("min_pca_confidence", "max_mid_degree")
-            },
-        )
+    materialize.write_nodes(out["nodes"], work_dir)
+    materialize.write_edges(out["edges"], work_dir)
     return out
 
 

@@ -31,6 +31,34 @@ class StageConfigMismatch(RuntimeError):
     pass
 
 
+def frame_fingerprint(df: DataFrame) -> list[int]:
+    """[row_count, content_hash] resume fingerprint of a (small) frame,
+    such as an eval set.
+
+    XOR over plain row hashes cancels duplicate rows (x ^ x = 0), so two
+    different eval sets whose delta is a duplicated PAIR would collide
+    (ADVICE r3) — and a resumed run would silently reuse a stale cached
+    clean stage, the exact leakage decontamination exists to prevent.
+    Folding each distinct row's MULTIPLICITY into the hashed value makes
+    duplicates non-cancelling: adding a second copy of row r changes
+    xxhash64(r, 1) to xxhash64(r, 2), a different contribution.  One
+    groupBy over the frame; order-independent via bit_xor.
+    """
+    cols = [F.col(c) for c in df.columns]
+    fp = (
+        df.groupBy(*cols)
+        .agg(F.count(F.lit(1)).alias("_kgce_mult"))
+        .agg(
+            F.sum("_kgce_mult").alias("n"),
+            F.coalesce(
+                F.bit_xor(F.xxhash64(*cols, F.col("_kgce_mult"))), F.lit(0)
+            ).alias("h"),
+        )
+        .first()
+    )
+    return [int(fp.n or 0), int(fp.h)]
+
+
 class StageRunner:
     def __init__(self, spark: SparkSession, work_dir: str, n_buckets: int = 8):
         self.spark = spark
@@ -40,6 +68,28 @@ class StageRunner:
     def _paths(self, stage: str) -> tuple[Path, Path, Path]:
         root = self.work_dir / stage
         return root, root / "data", root / "_manifest"
+
+    def _pin_config(self, stage: str, config: dict) -> None:
+        """Write the stage's config on first run; on resume, abort if it
+        changed.  A DataFrame value (e.g. clean_pages' ``eval_docs``) is
+        pinned by its :func:`frame_fingerprint` under ``<key>_fingerprint``."""
+        root, _, _ = self._paths(stage)
+        root.mkdir(parents=True, exist_ok=True)
+        pinned = {}
+        for k, v in config.items():
+            if isinstance(v, DataFrame):
+                pinned[f"{k}_fingerprint"] = frame_fingerprint(v)
+            else:
+                pinned[k] = v
+        cfg_file = root / "config.json"
+        cfg_json = json.dumps(pinned, sort_keys=True)
+        if cfg_file.exists():
+            if cfg_file.read_text() != cfg_json:
+                raise StageConfigMismatch(
+                    f"stage '{stage}' resume config mismatch; clear {root} or fix config"
+                )
+        else:
+            cfg_file.write_text(cfg_json)
 
     def completed_buckets(self, stage: str) -> set[int]:
         _, _, mdir = self._paths(stage)
@@ -76,20 +126,8 @@ class StageRunner:
         stage — mentions/pairs keep ``url``); when it does not, the wave
         falls back to bucket-at-a-time filtered writes.
         """
-        root, ddir, mdir = self._paths(stage)
-        root.mkdir(parents=True, exist_ok=True)
-
-        cfg_file = root / "config.json"
-        cfg_json = json.dumps(
-            {"n_buckets": self.n_buckets, "key": key, **(config or {})}, sort_keys=True
-        )
-        if cfg_file.exists():
-            if cfg_file.read_text() != cfg_json:
-                raise StageConfigMismatch(
-                    f"stage '{stage}' resume config mismatch; clear {root} or fix config"
-                )
-        else:
-            cfg_file.write_text(cfg_json)
+        _, ddir, mdir = self._paths(stage)
+        self._pin_config(stage, {"n_buckets": self.n_buckets, "key": key, **(config or {})})
 
         done = self.completed_buckets(stage)
         missing = [b for b in range(self.n_buckets) if b not in done]
@@ -171,17 +209,8 @@ class StageRunner:
         checkpointing would silently drop cross-bucket links).  Resume
         granularity is all-or-nothing for such stages by construction.
         """
-        root, ddir, mdir = self._paths(stage)
-        root.mkdir(parents=True, exist_ok=True)
-        cfg_file = root / "config.json"
-        cfg_json = json.dumps({"global": True, **(config or {})}, sort_keys=True)
-        if cfg_file.exists():
-            if cfg_file.read_text() != cfg_json:
-                raise StageConfigMismatch(
-                    f"stage '{stage}' resume config mismatch; clear {root} or fix config"
-                )
-        else:
-            cfg_file.write_text(cfg_json)
+        _, ddir, mdir = self._paths(stage)
+        self._pin_config(stage, {"global": True, **(config or {})})
         if (ddir / "_SUCCESS").exists():
             return self.spark.read.parquet(str(ddir))
         t0 = time.monotonic()

@@ -313,7 +313,12 @@ def build_nodes(canon: DataFrame, mentions: DataFrame, n_buckets: int = 32) -> D
             F.min("norm").alias("canonical_text"),
             F.collect_set("norm").alias("aliases"),
             F.sum(F.coalesce("n_mentions", F.lit(0))).alias("n_mentions"),
-            F.max_by("type", F.coalesce("n_mentions", F.lit(0))).alias("type"),
+            # the type of the most-mentioned surface form, ties to the
+            # smallest type name, so the pick does not depend on row
+            # order (which changes with partitioning)
+            F.min(
+                F.struct(-F.coalesce("n_mentions", F.lit(0)), F.col("type").alias("t"))
+            )["t"].alias("type"),
         )
         .withColumn("bucket", F.pmod(F.col("canonical_id"), F.lit(n_buckets)).cast("int"))
     )

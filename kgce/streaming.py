@@ -295,9 +295,9 @@ def stream_triples_merge(
             from pyspark.sql import functions as F
 
             from .operators.lmfilter import perplexity_filter
-            from .operators.linking import _checkpoint
+            from .plans.stage import checkpoint
 
-            keyed = _checkpoint(batch_df).withColumn(
+            keyed = checkpoint(batch_df).withColumn(
                 "_rk", F.md5(F.concat_ws("\x00", F.col("url"), F.col("text")))
             )
             batch_df = perplexity_filter(

@@ -137,32 +137,6 @@ def main() -> None:
         "labels are a post-join projection, so the expensive tagger only "
         "ever sees the added/changed slice downstream",
     }
-    # table-backed BGP query: build a tiny KG, write the edges table,
-    # and audit the pattern-join plan the way a downstream consumer
-    # runs it (per-pattern pushed-down scans, no upstream re-execution)
-    import tempfile
-
-    from kgce import pipeline as _pl
-    from kgce.operators.bgp import match_bgp
-
-    def _kg_bgp(spark_, sf_):
-        docs = spark_.read.parquet(f"{sf_}/documents.parquet")
-        pages = docs.selectExpr(
-            "concat('http://s', cast(doc_id % 40 as string), '/d', cast(doc_id as string)) as url",
-            "cast(null as timestamp) as warc_ts",
-            "cast(null as binary) as html",
-            "text",
-            "lang",
-        )
-        tmp = tempfile.mkdtemp(prefix="kgbgp_")
-        _pl.run(pages)["edges"].write.mode("overwrite").parquet(tmp)
-        edges = spark_.read.parquet(tmp)
-        return match_bgp(
-            edges,
-            [("?x", "rel:per_loc", "?c"), ("?y", "rel:per_loc", "?c")],
-            select_vars=["x", "y"],
-        )
-
     qs["rule_mining"] = em.bench_rule_mining
     picks["rule_mining"] = (
         "AMIE rule mining over the KG edges: the distinct-fact and "
@@ -210,15 +184,6 @@ def main() -> None:
         "host-vocabulary joins — the packed robots gate is a per-row "
         "greatest(struct) fold with NO aggregation over the frontier, "
         "and the politeness window partitions per host"
-    )
-    qs["kg_bgp"] = _kg_bgp
-    picks["kg_bgp"] = (
-        "SPARQL-style BGP over the MATERIALIZED edges table (the "
-        "production shape): one parquet scan per pattern with the "
-        "predicate constant as a PushedFilter, shared-variable "
-        "equi-join, SELECT DISTINCT as a partial-aggregated groupBy — "
-        "no upstream recompute (lazy pipeline inputs instead "
-        "auto-checkpoint ONE narrow projection, pinned in test_bgp)"
     )
     out = [HEAD]
     for name, note in picks.items():

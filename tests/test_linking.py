@@ -74,6 +74,25 @@ def test_connected_components_empty(spark):
     assert linking.connected_components(df).count() == 0
 
 
+@pytest.mark.parametrize("threshold", [1_000_000, 0])  # driver path / star loop
+def test_connected_components_assume_canonical_drops_null_ids(spark, threshold):
+    # an edge with a NULL id links nothing: the canonicalizing branch
+    # drops it as a self-loop, and the assume_canonical shortcut must
+    # drop it too instead of feeding a NULL node into either CC path
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (None, 5), (6, None), (None, None), (7, 8)], "a long, b long"
+    )
+    want = {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+    for assume in (False, True):
+        got = {
+            r.node: r.component
+            for r in linking.connected_components(
+                edges, small_graph_threshold=threshold, assume_canonical=assume
+            ).collect()
+        }
+        assert got == want, assume
+
+
 def test_cc_driver_path_chain_and_negatives(spark):
     # the vectorized driver path (Shiloach-Vishkin hooking + pointer
     # doubling) on its own worst case: a long shuffled-id chain forces

@@ -1,7 +1,9 @@
 """End-to-end pipeline: pages -> triples -> canonical ids -> nodes/edges,
 plus the checkpointed variant writing real outputs."""
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kgce import pipeline, schemas, synth
 
@@ -184,13 +186,15 @@ def test_eval_fingerprint_duplicate_pairs_do_not_cancel(spark):
     ev2 = spark.createDataFrame(
         [(1, "a"), (2, "b"), (4, "d"), (4, "d")], "doc_id long, text string"
     )
-    f1, f2 = pipeline.eval_set_fingerprint(ev1), pipeline.eval_set_fingerprint(ev2)
+    from kgce.plans.lineage import frame_fingerprint
+
+    f1, f2 = frame_fingerprint(ev1), frame_fingerprint(ev2)
     assert f1[0] == f2[0] == 4
     assert f1[1] != f2[1]
     # deterministic across recomputation
-    assert pipeline.eval_set_fingerprint(ev1) == f1
+    assert frame_fingerprint(ev1) == f1
     # and empty input is stable, not an error
-    assert pipeline.eval_set_fingerprint(ev1.limit(0)) == [0, 0]
+    assert frame_fingerprint(ev1.limit(0)) == [0, 0]
 
 
 def test_clean_pages_realizes_target_mixture(spark):
@@ -535,3 +539,73 @@ def test_pipeline_run_with_embeddings(spark):
     for r in rows:
         if r.embedding is not None:
             assert abs(math.sqrt(sum(v * v for v in r.embedding)) - 1.0) < 1e-5
+
+
+def _table_fingerprint(df):
+    """(row count, bit_xor of xxhash64 over every column, arrays sorted):
+    equal for equal row multisets however they were partitioned."""
+    cols = [
+        F.array_sort(F.col(f.name)) if isinstance(f.dataType, T.ArrayType) else F.col(f.name)
+        for f in sorted(df.schema.fields, key=lambda f: f.name)
+    ]
+    r = df.agg(
+        F.count(F.lit(1)).alias("n"), F.coalesce(F.bit_xor(F.xxhash64(*cols)), F.lit(0)).alias("h")
+    ).first()
+    return int(r.n), int(r.h)
+
+
+def _parity_pages(spark):
+    """Synthetic pages plus pages that give every option something to do:
+    alias and acronym text (aliases) and JSON-LD blocks (structured)."""
+    from datetime import datetime
+
+    rows = list(synth.gen_pages(30, seed=29))
+    extra = [
+        ("Barack Obama visited Geneva and later Obama spoke.", None),
+        ("United Nations (UN) met. People praised the United Nations today and the UN agreed.",
+         None),
+        ("Ada visited Berlin. Ada met Turing.",
+         '{"@type": "Person", "name": "Ada", "worksFor": {"name": "Analytical"}}'),
+        ("Berlin hosts Turing.", '{"@type": "Organization", "name": "Initech"}'),
+    ]
+    for i, (text, ld) in enumerate(extra):
+        html = "<html><body>" + text
+        if ld:
+            html += f'<script type="application/ld+json">{ld}</script>'
+        rows.append({"url": f"http://parity{i}.example/p", "warc_ts": datetime(2024, 1, 1),
+                     "html": (html + "</body></html>").encode("utf-8"), "text": text,
+                     "lang": "en"})
+    return spark.createDataFrame(rows, schema=schemas.PAGES)
+
+
+@pytest.mark.parametrize("option_set", ["none", "clean", "provenance_structured", "aliases_infer"])
+def test_run_and_run_checkpointed_build_equal_tables(spark, tmp_path, option_set):
+    """The in-memory and the checkpointed entry points compose one
+    dataflow: equal nodes and edges (and inferred facts) for each option
+    set, and a resume on the completed directory returns them again."""
+    pages = _parity_pages(spark)
+    opts = {
+        "none": {},
+        # the hygiene pass as __spark_entry__.pipeline_full sets it
+        "clean": {"clean": {
+            "canonical_urls": True, "exact_dedup": True, "repetition": True,
+            "boilerplate_min_df": 3, "decontam_n": 8,
+            "eval_docs": spark.createDataFrame(
+                [(r.url, r.text) for r in pages.orderBy("url").limit(3).collect()],
+                "doc_id string, text string",
+            ),
+        }},
+        "provenance_structured": {"provenance_k": 2, "structured": True},
+        "aliases_infer": {
+            "aliases": {"min_docs": 1, "match_type": False},
+            "infer": {"min_support": 1, "min_pca_confidence": 0.5},
+        },
+    }[option_set]
+    tables = ["nodes", "edges"] + (["inferred"] if "infer" in opts else [])
+    want = {t: _table_fingerprint(df) for t, df in pipeline.run(pages, **opts).items()
+            if t in tables}
+    assert want["edges"][0] > 0
+    wd = str(tmp_path / "work")
+    for _ in range(2):  # a fresh run, then a resume on the completed directory
+        out = pipeline.run_checkpointed(pages, wd, n_buckets=4, salt_hot_domains=True, **opts)
+        assert {t: _table_fingerprint(out[t]) for t in tables} == want
