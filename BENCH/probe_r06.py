@@ -113,19 +113,19 @@ def main():
         signed = checkpoint(linking.minhash_signatures(vocab))
         timed("banded_counts", lambda: signed.select(
             "entity_key").limit(1), action=None)
-        cands = linking.candidate_pairs_lsh(signed, materialize=False)
+        cands = linking.candidate_pairs_lsh(signed)
         timed("candidate_pairs_lsh", lambda: cands)
         out["n_cands"] = cands.count()
         edges = linking.verified_edges(
-            linking.candidate_pairs_lsh(signed, materialize=False), 0.6)
+            linking.candidate_pairs_lsh(signed), 0.6)
         timed("verified_edges", lambda: edges)
         out["n_edges"] = edges.count()
         e2 = linking.verified_edges(
-            linking.candidate_pairs_lsh(signed, materialize=False), 0.6)
+            linking.candidate_pairs_lsh(signed), 0.6)
         timed("cc_total", lambda: linking.connected_components(e2))
         # probe step alone
         e3 = linking.verified_edges(
-            linking.candidate_pairs_lsh(signed, materialize=False), 0.6)
+            linking.candidate_pairs_lsh(signed), 0.6)
         und = (
             e3.select(F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi"))
             .filter(F.col("lo") != F.col("hi"))

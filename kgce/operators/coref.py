@@ -18,7 +18,7 @@ text, both recoverable DETERMINISTICALLY from document structure:
 
 The reference engine (ClinicalTransformerNER) has no counterpart —
 beyond-reference KG tooling per the task brief, same stance as
-rules/constraints.
+rules.
 
 Scale shape:
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.stage import checkpoint
+from .linking import band_pairs, verified_edges
 
 
 def normalize_doc(col) -> "F.Column":
@@ -115,29 +116,14 @@ def ngram_jaccard_pairs(
         F.explode(word_shingles(F.col(text_col), n)).alias("shingle"),
     )
     if max_df is not None:
-        rare = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= max_df)
-            .select("shingle")
-        )
-        idx = sh.join(rare, "shingle")  # pruned inverted index
-        a = idx.select(F.col("doc_id").alias("a"), "shingle")
-        b = idx.select(F.col("doc_id").alias("b"), "shingle")
-        cands = a.join(b, "shingle").filter(F.col("a") < F.col("b")).select("a", "b").distinct()
+        cands = band_pairs(sh, "doc_id", ["shingle"], max_df).distinct()
         full = docs.select(
             F.col(id_col).alias("_id"), word_shingles(F.col(text_col), n).alias("_sh")
         )
-        # |A∪B| = |A| + |B| - |A∩B| (exact: word_shingles is distinct) —
-        # one set operation per pair instead of two
-        inter = F.size(F.array_intersect("_sha", "_shb")).cast("double")
-        union = (F.size("_sha") + F.size("_shb")).cast("double") - inter
-        return (
-            cands.join(full.select(F.col("_id").alias("a"), F.col("_sh").alias("_sha")), "a")
-            .join(full.select(F.col("_id").alias("b"), F.col("_sh").alias("_shb")), "b")
-            .withColumn("jaccard", inter / union)
-            .filter(F.col("jaccard") >= threshold)
-            .select("a", "b", "jaccard")
+        return verified_edges(
+            cands.join(full.select(F.col("_id").alias("a"), F.col("_sh").alias("sh_a")), "a")
+            .join(full.select(F.col("_id").alias("b"), F.col("_sh").alias("sh_b")), "b"),
+            threshold,
         )
     a = sh.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("na"), "shingle")
     b = sh.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("nb"), "shingle")
@@ -283,28 +269,13 @@ def minhash_lsh_pairs(
     ``max_bucket_size`` is the hot-bucket skew guard for 10^12-doc runs:
     a degenerate bucket of k members (boilerplate pages, empty docs)
     yields k²/2 candidate pairs in ONE task.  Buckets larger than the cap
-    are dropped from candidate generation — their members still pair via
-    their other (more selective) bands, which is where true near-dups
-    agree anyway.  Default None = exact oracle behavior.
+    are dropped from candidate generation (linking.band_pairs) — their
+    members still pair via their other (more selective) bands, which is
+    where true near-dups agree anyway.  Default None = exact oracle
+    behavior.
     """
     bb = checkpoint(minhash_band_buckets(docs, **kw))
-    if max_bucket_size is not None:
-        small = (
-            bb.groupBy("band_id", "bucket")
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") <= max_bucket_size)
-            .select("band_id", "bucket")
-        )
-        bb = bb.join(small, ["band_id", "bucket"])
-    x, y = bb.alias("x"), bb.alias("y")
-    return (
-        x.join(
-            y,
-            F.expr("x.band_id = y.band_id AND x.bucket = y.bucket AND x.doc_id < y.doc_id"),
-        )
-        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .distinct()
-    )
+    return band_pairs(bb, "doc_id", ["band_id", "bucket"], max_bucket_size).distinct()
 
 
 def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

@@ -5,8 +5,10 @@
    ``xxhash64(shingle, seed_i)`` per hash function, all JVM-side column
    expressions (no UDF),
 3. LSH banding: pairs sharing any band bucket are candidates (the
-   blocked similarity join — one shuffle on band key; AQE skew-join
-   handles hot buckets like single-token surface forms),
+   blocked similarity join — one shuffle on band key, in
+   :func:`band_pairs`, which dedup's blockers share); buckets over
+   ``MAX_BUCKET_SIZE`` members, like single-token surface forms, are
+   dropped,
 4. verify candidates with exact Jaccard on shingle sets
    (array_intersect/array_union — still JVM-side),
 5. connected components over the verified similarity edges via the
@@ -27,6 +29,7 @@ from ..plans.stage import checkpoint
 
 DEFAULT_NUM_HASHES = 12
 DEFAULT_BANDS = 4  # 4 bands x 3 rows
+MAX_BUCKET_SIZE = 10_000  # band_pairs' hot-bucket cap
 
 
 def normalize_text(col) -> "F.Column":
@@ -71,62 +74,77 @@ def minhash_signatures(vocab: DataFrame, num_hashes: int = DEFAULT_NUM_HASHES) -
     )
 
 
-def candidate_pairs_lsh(
-    signed: DataFrame,
-    bands: int = DEFAULT_BANDS,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    max_bucket_size: int | None = 10_000,
-    materialize: bool = True,
+def band_pairs(
+    banded: DataFrame, id_col: str, keys: list, max_bucket_size: int | None
 ) -> DataFrame:
-    """Pairs of entity keys sharing >=1 LSH band bucket (a < b).
+    """The band self-join of every LSH blocker: ``(a, b)`` id pairs with
+    a < b, one row per shared bucket (NOT deduplicated — each caller
+    picks its own tail), over ``banded`` rows of (``id_col``, ``keys``).
 
     ``max_bucket_size`` caps degenerate buckets (stop-word-like surface
-    forms — "Inc", single hot tokens — land millions of vocabulary
-    entries in one bucket at web scale, and a k-member bucket emits k²/2
+    forms — "Inc", single hot tokens — or boilerplate pages land millions
+    of rows in one bucket at web scale, and a k-member bucket emits k²/2
     pairs in one task).  Oversized buckets are dropped; genuinely similar
-    forms still pair through their other bands.  The SURVEY §7 hard-parts
-    list calls this the real-world hot spot.
-
-    ``materialize`` checkpoints ``signed`` first: this plan consumes it
-    from SIX subtrees (band explode x2, bucket counts x2, payload
-    re-attach x2), and when it derives from the mention-extraction UDF an
-    unmaterialized fork re-runs that UDF per consumer (the CLAUDE.md
-    self-join trap; verified 6 MapInPandas in the live plan).  Pass
-    False only if the caller already materialized it.
+    rows still pair through their other buckets.  The SURVEY §7
+    hard-parts list calls this the real-world hot spot.  None keeps
+    every bucket.
     """
-    if materialize:
-        signed = checkpoint(signed)
-    rows = num_hashes // bands
-    band_cols = F.array(
-        *[
-            F.xxhash64(F.slice("signature", i * rows + 1, rows).cast("string"), F.lit(1000 + i))
-            for i in range(bands)
-        ]
-    )
-    # the band explode + self-join + dedup move ONLY (band, entity_key) —
-    # 16 bytes/row instead of norm + shingle arrays replicated per band
-    # (r2 ADVICE: at vocabulary scale the fat payload dominated the
-    # shuffled/broadcast bytes).  norm/shingles re-attach below to the
-    # SURVIVING pairs only, which LSH makes a tiny fraction of the
-    # banded rows; the payload probe also never computes the minhash
-    # signature (Catalyst prunes it), so the re-attach costs two joins
-    # against the shingled vocab, not two signature passes.
-    banded = signed.select("entity_key", F.explode(band_cols).alias("band"))
     if max_bucket_size is not None:
         small = (
-            banded.groupBy("band")
+            banded.groupBy(*keys)
             .agg(F.count("*").alias("_n"))
             .filter(F.col("_n") <= max_bucket_size)
-            .select("band")
+            .select(*keys)
         )
-        banded = banded.join(small, "band")
-    a = banded.select("band", F.col("entity_key").alias("a"))
-    b = banded.select("band", F.col("entity_key").alias("b"))
-    pairs = (
-        a.join(b, "band")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
+        banded = banded.join(small, keys)
+    a = banded.select(*keys, F.col(id_col).alias("a"))
+    b = banded.select(*keys, F.col(id_col).alias("b"))
+    return a.join(b, keys).filter(F.col("a") < F.col("b")).select("a", "b")
+
+
+def _banded(signed: DataFrame) -> DataFrame:
+    """(entity_key, band) rows, one per LSH band: the band's bucket key is
+    xxhash64 of its slice of the signature, seeded per band.
+
+    Only these 16 bytes/row go through the band explode and self-join —
+    norm and shingle arrays replicated per band dominated the shuffled
+    bytes at vocabulary scale (r2 ADVICE); callers re-attach payloads
+    to the surviving pairs only."""
+    rows = DEFAULT_NUM_HASHES // DEFAULT_BANDS
+    keys = F.array(
+        *[
+            F.xxhash64(F.slice("signature", i * rows + 1, rows).cast("string"), F.lit(1000 + i))
+            for i in range(DEFAULT_BANDS)
+        ]
+    )
+    return signed.select("entity_key", F.explode(keys).alias("band"))
+
+
+def _shingle_hash(s: "F.Column") -> "F.Column":
+    """Per-shingle int32 hash of the verify prefilter (top 31 bits of
+    xxhash64).  Module-level so a test can force collisions."""
+    return F.shiftright(F.xxhash64(s), 33).cast("int")
+
+
+def candidate_pairs_lsh(signed: DataFrame) -> DataFrame:
+    """Pairs of entity keys sharing >=1 LSH band bucket (a < b), with
+    both sides' norm and shingles attached — the reference composition
+    ``verified_edges(candidate_pairs_lsh(signed))`` that
+    :func:`verified_pairs` restructures.
+
+    ``signed`` is checkpointed first: this plan consumes it from SIX
+    subtrees (band explode x2, bucket counts x2, payload re-attach x2),
+    and when it derives from the mention-extraction UDF an
+    unmaterialized fork re-runs that UDF per consumer (the self-join
+    trap; verified 6 MapInPandas in the live plan).  An
+    already checkpointed frame comes back unchanged, with no Spark job.
+    """
+    signed = checkpoint(signed)
+    # the payload probe never computes the minhash signature (Catalyst
+    # prunes it), so the re-attach costs two joins against the shingled
+    # vocab, not two signature passes
+    pairs = band_pairs(_banded(signed), "entity_key", ["band"], MAX_BUCKET_SIZE).dropDuplicates(
+        ["a", "b"]
     )
     payload = signed.select("entity_key", "norm", "shingles")
     return pairs.join(
@@ -146,13 +164,7 @@ def candidate_pairs_lsh(
     ).select("a", "b", "norm_a", "norm_b", "sh_a", "sh_b")
 
 
-def verified_pairs(
-    signed: DataFrame,
-    threshold: float = 0.6,
-    bands: int = DEFAULT_BANDS,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    max_bucket_size: int | None = 10_000,
-) -> DataFrame:
+def verified_pairs(signed: DataFrame, threshold: float = 0.6) -> DataFrame:
     """``verified_edges(candidate_pairs_lsh(signed), threshold)`` with
     the SAME output, restructured for the per-pair hot loop (the LSH
     self-join emits 12M candidate pairs from a 15k vocabulary at sf1.0
@@ -179,30 +191,11 @@ def verified_pairs(
     * |A∪B| is |A| + |B| - |A∩B| on both passes (arrays are distinct
       by construction).
 
-    ``signed`` must be materialized (the caller checkpoints it — same
-    contract as ``candidate_pairs_lsh(materialize=False)``).
+    ``signed`` is checkpointed first, like in
+    :func:`candidate_pairs_lsh`; callers pass an already checkpointed
+    frame, for which that starts no Spark job.
     """
-    rows = num_hashes // bands
-    band_cols = F.array(
-        *[
-            F.xxhash64(
-                F.slice("signature", i * rows + 1, rows).cast("string"),
-                F.lit(1000 + i),
-            )
-            for i in range(bands)
-        ]
-    )
-    banded = signed.select("entity_key", F.explode(band_cols).alias("band"))
-    if max_bucket_size is not None:
-        small = (
-            banded.groupBy("band")
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") <= max_bucket_size)
-            .select("band")
-        )
-        banded = banded.join(small, "band")
-    a = banded.select("band", F.col("entity_key").alias("a"))
-    b = banded.select("band", F.col("entity_key").alias("b"))
+    signed = checkpoint(signed)
     # A bare hash exchange on the pair key stands between generation and
     # verification — NOT a dropDuplicates: deduplicating 12M
     # mostly-unique (a, b) keys builds useless partial-aggregation hash
@@ -215,11 +208,8 @@ def verified_pairs(
     # prefilter once per band and dedups in the ~11% survivor set below.
     spark = signed.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    pairs = (
-        a.join(b, "band")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .repartition(n_part, "a", "b")
+    pairs = band_pairs(_banded(signed), "entity_key", ["band"], MAX_BUCKET_SIZE).repartition(
+        n_part, "a", "b"
     )
     # int32 (top-31-bit) hashes: half the bytes of int64 copied through
     # the two 12M-row payload joins, measured ~10% off the whole chain.
@@ -231,10 +221,7 @@ def verified_pairs(
     hashed = signed.select(
         "entity_key",
         F.array_distinct(
-            F.transform(
-                F.col("shingles"),
-                lambda s: F.shiftright(F.xxhash64(s), 33).cast("int"),
-            )
+            F.transform(F.col("shingles"), _shingle_hash)
         ).alias("_hs"),
         F.size("shingles").alias("_ns"),
     ).select(
@@ -507,12 +494,10 @@ def blocking_quality(
     mentions: DataFrame,
     threshold: float = 0.6,
     sample_permille: int = 50,
-    bands: int = DEFAULT_BANDS,
-    num_hashes: int = DEFAULT_NUM_HASHES,
 ) -> DataFrame:
     """Measure the LSH blocking against exact ground truth on a bounded
-    sample — the "measure, don't guess" gauge for the banding/threshold
-    knobs before a 10^12-page run commits to them.
+    sample — the "measure, don't guess" gauge for the banding constants
+    and the threshold before a 10^12-page run commits to them.
 
     One row: (n_sampled, n_true_pairs, n_candidate_pairs, n_found,
     pair_completeness, reduction_ratio) where
@@ -540,7 +525,7 @@ def blocking_quality(
         )
         < sample_permille
     )
-    signed = checkpoint(minhash_signatures(vocab, num_hashes=num_hashes))
+    signed = checkpoint(minhash_signatures(vocab))
     n_sampled = signed.count()
     x = signed.select(
         F.col("entity_key").alias("a"), F.col("shingles").alias("sh_a")
@@ -548,19 +533,10 @@ def blocking_quality(
     y = signed.select(
         F.col("entity_key").alias("b"), F.col("shingles").alias("sh_b")
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
     true_pairs = checkpoint(
-        x.join(y, F.col("a") < F.col("b"))
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b")
+        verified_edges(x.join(y, F.col("a") < F.col("b")), threshold).select("a", "b")
     )
-    cands = checkpoint(
-        candidate_pairs_lsh(
-            signed, bands=bands, num_hashes=num_hashes, materialize=False
-        ).select("a", "b")
-    )
+    cands = checkpoint(candidate_pairs_lsh(signed).select("a", "b"))
     n_true = true_pairs.count()
     n_cand = cands.count()
     n_found = true_pairs.join(cands, ["a", "b"], "left_semi").count()

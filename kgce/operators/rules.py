@@ -9,7 +9,7 @@ predicate canonicalization, and (b) chain rules
 (``p1(x,z) ^ p2(z,y) => p(x,y)``) that feed KG completion the same way
 NELL/Knowledge-Vault promote inferred facts.  The reference engine
 (ClinicalTransformerNER) has no counterpart — beyond-reference KG
-tooling per the task brief, same stance as constraints/kgembed.
+tooling per the task brief, same stance as kgembed.
 
 Metrics follow AMIE exactly, all exact integers until the final
 divisions (bit-identical across engines):
@@ -29,9 +29,7 @@ divisions (bit-identical across engines):
                        functionality (subject- vs object-side); this
                        implementation always uses the SUBJECT direction
                        — the right default for web extraction, where
-                       subject functionality dominates (and
-                       constraints.predicate_profile supplies both
-                       functionalities when a caller wants to gate);
+                       subject functionality dominates);
 * ``confidence = support / body_count``,
   ``head_coverage = support / head_size``,
   ``pca_confidence = support / pca_body_count``.

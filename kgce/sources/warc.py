@@ -34,10 +34,10 @@ Text extraction (``html_to_text``) is a deterministic baseline —
 script/style removal, tag strip, the common entities, whitespace
 squeeze.  Production pipelines plug a real extractor (trafilatura /
 resiliparse) in its place; those libraries are not in this sandbox, so
-the baseline is the honest default (same stance as multimodal's
-codec-gated decode).  The whole parse is RE2-expressible (script and
-style blocks are stripped separately to avoid backreferences), so the
-WARC projection has a DuckDB oracle twin (tests/test_warc.py).
+the baseline is the honest default.  The whole parse is
+RE2-expressible (script and style blocks are stripped separately to
+avoid backreferences), so the WARC projection has a DuckDB oracle twin
+(tests/test_warc.py).
 """
 
 from __future__ import annotations

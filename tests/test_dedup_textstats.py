@@ -4,7 +4,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from kgce.operators import ann, dedup, multimodal, textstats
+from kgce.operators import ann, dedup, textstats
 
 SF = "/root/testdata/sf0.001"
 
@@ -368,22 +368,6 @@ def test_boilerplate_detection_and_strip(spark):
     assert "SortAggregate" not in plan  # struct collect_list keeps hash agg
 
 
-def test_multimodal_plumbing(spark):
-    media = spark.createDataFrame(multimodal.gen_media(30), schema=multimodal.MEDIA)
-    feats = multimodal.extract_features(media, dim=16)
-    rows = feats.collect()
-    assert len(rows) == 30
-    assert all(len(r.feature) == 16 for r in rows)
-    # deterministic across runs
-    again = multimodal.extract_features(media, dim=16).collect()
-    assert sorted((r.media_id, tuple(r.feature)) for r in rows) == sorted(
-        (r.media_id, tuple(r.feature)) for r in again
-    )
-    frames = multimodal.frame_sample_plan(media, every_n=10)
-    vid = frames.groupBy("media_id").count().collect()
-    assert all(r["count"] == 10 for r in vid)  # 100 frames / every 10
-
-
 def test_near_dup_groups_end_to_end(spark):
     rows = [(i, f"totally unique document number {i} about topic {i * 7}") for i in range(20)]
     base = "the quick brown fox jumps over the lazy dog near the river bank today"
@@ -396,43 +380,6 @@ def test_near_dup_groups_end_to_end(spark):
     assert g[100][1] and not g[101][1] and not g[102][1]
     # unique docs keep themselves
     assert all(g[i] == (i, True) for i in range(20))
-
-
-def test_media_header_sniff_real_formats(spark):
-    """Container-header metadata decode is REAL byte parsing (no codecs):
-    PNG IHDR, JPEG SOF walk, GIF screen descriptor, WAV fmt chunk."""
-    from kgce.operators import multimodal as mm
-
-    rows = [
-        (1, "image", mm.make_png(640, 480), None),
-        (2, "image", mm.make_jpeg(1024, 768), None),
-        (3, "audio", mm.make_wav(44100), None),
-        (4, "image", b"GIF89a" + (320).to_bytes(2, "little") + (200).to_bytes(2, "little") + bytes(4), None),
-        (5, "video", b"\x00\x01garbage-unknown-container", None),
-        (6, "image", None, None),
-    ]
-    df = spark.createDataFrame(rows, mm.MEDIA)
-    got = {r.media_id: r.asDict() for r in mm.extract_media_meta(df).collect()}
-    assert got[1] == {"media_id": 1, "mime": "image/png", "width": 640, "height": 480, "sample_rate": None}
-    assert got[2]["mime"] == "image/jpeg" and (got[2]["width"], got[2]["height"]) == (1024, 768)
-    assert got[3]["mime"] == "audio/wav" and got[3]["sample_rate"] == 44100
-    assert got[4]["mime"] == "image/gif" and (got[4]["width"], got[4]["height"]) == (320, 200)
-    assert got[5]["mime"] is None and got[6]["mime"] is None
-
-
-def test_media_sniff_pure_python_oracle():
-    """Sniffer semantics independent of Spark: JPEG with restart markers
-    and multi-segment walk before SOF."""
-    from kgce.operators import multimodal as mm
-
-    jpeg = mm.make_jpeg(33, 44)
-    assert mm.sniff_media_meta(jpeg) == {
-        "mime": "image/jpeg", "width": 33, "height": 44, "sample_rate": None
-    }
-    assert mm.sniff_media_meta(b"")["mime"] is None
-    assert mm.sniff_media_meta(None)["mime"] is None
-    png = mm.make_png(1, 2)
-    assert mm.sniff_media_meta(png)["height"] == 2
 
 
 def test_ngram_jaccard_max_df_pruning_keeps_exact_values(spark):

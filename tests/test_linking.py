@@ -194,11 +194,51 @@ def test_verified_pairs_equals_reference_composition(spark):
     ref = {
         (r.a, r.b, round(r.jaccard, 9))
         for r in linking.verified_edges(
-            linking.candidate_pairs_lsh(signed, materialize=False), 0.6
+            linking.candidate_pairs_lsh(signed), 0.6
         ).collect()
     }
     assert fast == ref
     assert fast  # non-degenerate: the corpus must actually produce edges
+
+
+def test_verified_pairs_injectivity_bypass_keeps_collided_pair(spark, monkeypatch):
+    # force the within-surface collision the prefilter bound cannot
+    # survive (A={a1,a2,x}, B={a1,a2,y}, h(a1)=h(a2)): every shingle the
+    # two surfaces share hashes to one value, so the hashed Jaccard reads
+    # 1/4 while the true Jaccard is 14/17 — only the bypass keeps the pair
+    near, far = "sparkling waters", "sparkling water"
+
+    def shingles(t):
+        pad = f" {t} "
+        return {pad[i : i + 3] for i in range(len(pad) - 2)}
+
+    shared = sorted(shingles(near) & shingles(far))
+    assert len(shared) == 14
+    real = linking._shingle_hash
+    monkeypatch.setattr(
+        linking,
+        "_shingle_hash",
+        lambda s: F.when(s.isin(*shared), F.lit(0)).otherwise(real(s)),
+    )
+    texts = [near, far, "zebra crossing", "quartz vector"]
+    mentions = spark.createDataFrame([(t,) for t in texts], "text string").select(
+        F.lit("u").alias("url"), F.col("text")
+    )
+    signed = linking.minhash_signatures(
+        linking.entity_vocab(mentions)
+    ).localCheckpoint(eager=True)
+    keys = {r.norm: r.entity_key for r in signed.collect()}
+    pair = tuple(sorted((keys[near], keys[far])))
+    fast = {
+        (r.a, r.b, round(r.jaccard, 9))
+        for r in linking.verified_pairs(signed, 0.6).collect()
+    }
+    ref = {
+        (r.a, r.b, round(r.jaccard, 9))
+        for r in linking.verified_edges(linking.candidate_pairs_lsh(signed), 0.6).collect()
+    }
+    assert fast == ref
+    assert (*pair, round(14 / 17, 9)) in fast
 
 
 def test_blocking_quality_gauge(spark):
@@ -233,7 +273,7 @@ def test_blocking_quality_gauge(spark):
     }
     cands = {
         (r.a, r.b)
-        for r in linking.candidate_pairs_lsh(signed, materialize=False)
+        for r in linking.candidate_pairs_lsh(signed)
         .select("a", "b").collect()
     }
     assert out.n_sampled == k

@@ -57,24 +57,30 @@ def test_lsh_pairs_joins_checkpointed_buckets(spark):
 
 
 def test_linking_lsh_slim_join_and_single_udf_pass(spark):
-    """candidate_pairs_lsh: (1) the signed vocab is materialized once —
-    none of its six consumers re-runs the mention-extraction UDF; (2) the
-    band self-join moves only (band, entity_key) — norm/shingle payloads
-    re-attach to surviving pairs AFTER the pair dedup, so no exchange
-    below the dedup carries a shingles column."""
+    """candidate_pairs_lsh and the production path verified_pairs: (1)
+    the signed vocab is materialized once — none of its consumers
+    re-runs the mention-extraction UDF; (2) the band self-join moves
+    only (band, entity_key) — payloads re-attach to pairs AFTER the pair
+    dedup (candidate_pairs_lsh) or the pair-key exchange
+    (verified_pairs), so no exchange below it carries a shingles
+    column."""
     from kgce import tagging
     from kgce.operators import linking
 
     mentions = tagging.extract_mentions(_pages(spark, 15))
     signed = linking.minhash_signatures(linking.entity_vocab(mentions))
-    plan = _plan(linking.candidate_pairs_lsh(signed))
-    assert "MapInPandas" not in plan  # UDF ran once, at checkpoint time
-    # the band self-join's inputs are 2-column projections — the rename
-    # to a/b happens on (band, entity_key) alone, payload attaches later
-    assert re.search(r"Project \[band#\d+L, entity_key#\d+L AS a#\d+L\]", plan)
-    assert re.search(r"Project \[band#\d+L, entity_key#\d+L AS b#\d+L\]", plan)
-    # and the pair dedup aggregates the slim keys only
-    assert re.search(r"HashAggregate\(keys=\[a#\d+L, b#\d+L\], functions=\[\], output=\[a#\d+L, b#\d+L\]\)", plan)
+    cands = _plan(linking.candidate_pairs_lsh(signed))
+    verified = _plan(linking.verified_pairs(signed))
+    for plan in (cands, verified):
+        assert "MapInPandas" not in plan  # UDF ran once, at checkpoint time
+        # the band self-join's inputs are 2-column projections — the rename
+        # to a/b happens on (band, entity_key) alone, payload attaches later
+        assert re.search(r"Project \[band#\d+L, entity_key#\d+L AS a#\d+L\]", plan)
+        assert re.search(r"Project \[band#\d+L, entity_key#\d+L AS b#\d+L\]", plan)
+    # candidate_pairs_lsh's pair dedup aggregates the slim keys only
+    assert re.search(r"HashAggregate\(keys=\[a#\d+L, b#\d+L\], functions=\[\], output=\[a#\d+L, b#\d+L\]\)", cands)
+    # verified_pairs spreads the slim pairs by pair key before the verify
+    assert re.search(r"hashpartitioning\(a#\d+L, b#\d+L", verified)
 
 
 def test_strip_boilerplate_single_sentence_pass(spark):
