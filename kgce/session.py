@@ -5,6 +5,33 @@ AQE on (adaptive coalescing + skew-join splitting supplies the
 "adaptive shuffle partitioning at the entity-linking join" requirement),
 Arrow enabled for every pandas-UDF stage, shuffle partitions sized to the
 core count rather than the 200 default.
+
+Two fixed codegen settings make a long-lived session (repeated batch
+jobs, ``run_checkpointed`` resumes, streaming micro-batches) compile
+each generated class once:
+
+* ``spark.sql.codegen.cache.maxEntries``: Spark keeps compiled
+  whole-stage and expression classes in an LRU cache of 100 entries by
+  default.  One pass of the composed pipeline uses more distinct
+  classes than that (measured, local[2], Spark 4.1.2: ~190 on the
+  perfbench ``crawl_batch`` job, ~80 more on ``crawl_resume``), so
+  every pass evicted the classes the next one needed, hit nothing and
+  recompiled them all; the JIT then re-optimized the new copies, which
+  was most of a warm pass's CPU time.  Both jobs run alternately in
+  one session compile 285 distinct classes; at 300 or 500 entries
+  every later pass of either hits the cache (bar the few a reshaped
+  join adds).  500 leaves room for more stages: an LRU cache over a
+  cyclic working set just larger than itself gets no hits at all.
+  (The whole test suite, one session, compiles 2754 distinct classes
+  with the cache unbounded.)
+* ``spark.sql.codegen.useIdInClassName=false``: class names otherwise
+  carry the stage id AQE assigns, so the same code gets a new name,
+  and misses the cache, whenever a different input size renumbers the
+  plan (measured: 329 rather than 281 distinct classes over the two
+  jobs, 33 rather than 13 compiles on crawl_batch's first full-size
+  pass after a small warm-up).
+
+``extra_conf`` overrides either.
 """
 
 from __future__ import annotations
@@ -15,6 +42,8 @@ import tempfile
 from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+CODEGEN_CACHE_ENTRIES = 500
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -79,6 +108,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("KGCE_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # generated-class cache: see the module docstring for the working set
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     if "SPARK_MASTER" in os.environ:
         builder = builder.master(os.environ["SPARK_MASTER"])
