@@ -491,9 +491,12 @@ def q_structured_triples(spark, sf):
     graded by `relax_eval` (the same |a-b|<=bound overlap join on the
     eval tables), while this grades a whole new operator family."""
     from kgce.operators import structured as structured_ops
+    from kgce.operators import triples as triples_ops
 
-    return structured_ops.aggregate_structured_triples(
-        structured_ops.extract_structured_triples(_jsonld_pages(spark, sf))
+    return triples_ops.aggregate_triples(
+        structured_ops.as_scored_pairs(
+            structured_ops.extract_structured_triples(_jsonld_pages(spark, sf))
+        )
     )
 
 

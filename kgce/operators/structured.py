@@ -20,9 +20,11 @@ the optional final aggregation:
   predicate) with literal paths, one explode of the per-item predicate
   array.  A page's html is dropped before the explode so the fat
   column never rides through it.
-* ``aggregate_structured_triples`` is one partial-agg groupBy on the
-  triple key — the same exchange shape as triples.aggregate_triples,
-  so its output MERGES into the edges table via
+* ``as_scored_pairs`` projects the declared triples onto the text
+  path's scored-pair schema (literal object, confidence 1.0), so the
+  text path's aggregates (triples.aggregate_triples and its evidence
+  forms) aggregate them too: one partial-agg groupBy on the triple
+  key, whose output merges into the edges table via
   plans.materialize.merge_aggregated_triples unchanged.
 
 Cross-engine contract (pinned by the DuckDB twin in
@@ -192,65 +194,23 @@ def extract_structured_triples(
     )
 
 
-def aggregate_structured_triples_with_evidence(st: DataFrame, k: int) -> DataFrame:
-    """:func:`aggregate_structured_triples` + bounded top-``k``
-    ``evidence`` (url, confidence) structs — the schema the streaming
-    merge's provenance rollup consumes
-    (plans.materialize._rollup_with_evidence).  Declared confidence is
-    constant 1.0, so the text path's (confidence desc, url asc) rank
-    reduces to url asc; ``array_sort`` over the structs sorts by url
-    first, preserving that contract."""
-    from pyspark.sql import Window
+def as_scored_pairs(st: DataFrame) -> DataFrame:
+    """Per-page declared triples -> scored pairs, the input schema of
+    the text path's aggregates (triples.aggregate_triples,
+    aggregate_triples_with_evidence, aggregate_triples_with_provenance).
 
-    keys = ["subj_text", "pred", "obj_text", "subj_type"]
-    w = Window.partitionBy(*keys).orderBy("url")
-    return (
-        st.withColumn("_rk", F.row_number().over(w))
-        .groupBy(*keys)
-        .agg(
-            F.count("*").cast("long").alias("n_evidence"),
-            F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("_rk") <= k,
-                        F.struct(
-                            F.col("url").alias("url"),
-                            F.lit(1.0).alias("confidence"),
-                        ),
-                    )
-                )
-            ).alias("evidence"),
-        )
-        .select(
-            *keys,
-            F.lit("literal").alias("obj_type"),
-            "n_evidence",
-            F.lit(1.0).alias("confidence"),
-            "evidence",
-        )
-    )
-
-
-def aggregate_structured_triples(st: DataFrame) -> DataFrame:
-    """Per-page declared triples -> the edges-source aggregate schema
-    (subj_text, pred, obj_text, subj_type, obj_type, n_evidence,
-    confidence), union- and merge-compatible with the text-triple
-    aggregates (triples.aggregate_triples /
-    plans.materialize.merge_aggregated_triples).
-
-    ``obj_type`` is ``literal`` (declared values are strings, not
-    linked mentions) and ``confidence`` is 1.0 — the page AUTHOR
-    asserted the triple; there is no extraction uncertainty to score.
-    ``n_evidence`` counts asserting pages, same as the text path.
+    A declared triple is a pair whose object is a ``literal`` (a string
+    value, not a linked mention) scored ``1.0``: the page author
+    asserted it, so there is no extraction uncertainty to score.  Every
+    declared aggregate goes through those functions, so n_evidence and
+    the bounded evidence follow the text path's contract.
     """
-    return st.groupBy("subj_text", "pred", "obj_text", "subj_type").agg(
-        F.count("*").cast("long").alias("n_evidence"),
-    ).select(
+    return st.select(
+        "url",
         "subj_text",
+        "subj_type",
         "pred",
         "obj_text",
-        "subj_type",
         F.lit("literal").alias("obj_type"),
-        "n_evidence",
         F.lit(1.0).alias("confidence"),
     )

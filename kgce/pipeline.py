@@ -80,28 +80,6 @@ def _with_canonical_ids(
     )
 
 
-def canonical_triples(
-    mentions: DataFrame,
-    threshold: float = 0.6,
-    canon: DataFrame | None = None,
-    provenance_k: int | None = None,
-) -> DataFrame:
-    """Aggregated triples with canonical entity ids attached.
-
-    Pass a precomputed ``canon`` (linking.canonicalize output) to reuse
-    one LSH + connected-components job across triples AND node building —
-    recomputing it is a whole second iterative CC job.  ``provenance_k``
-    adds a bounded top-k ``evidence_urls`` column (single-pass
-    aggregation — no extra corpus scan).
-    """
-    scored = triples_ops.score_pairs(triples_ops.candidate_pairs_grouped(mentions))
-    if canon is None:
-        canon = linking.canonicalize(mentions, threshold=threshold)
-    return _with_canonical_ids(
-        _aggregate(scored, provenance_k), canon.select("norm", "canonical_id"), provenance_k
-    )
-
-
 def clean_pages(
     pages: DataFrame,
     canonical_urls: bool = False,
@@ -330,7 +308,14 @@ def structured_canonical(
     structured_cfg: dict | None = None,
 ) -> DataFrame:
     """Declared (schema.org JSON-LD) triples in the canonical-edges
-    schema, union-compatible with :func:`canonical_triples` output.
+    schema, union-compatible with the text triples of :func:`run`.
+
+    A declared triple is a scored pair (operators.structured.
+    as_scored_pairs: literal object, confidence 1.0), aggregated by the
+    text path's :func:`_aggregate`.  n_evidence counts asserting rows
+    and ``provenance_k`` keeps the top-k DISTINCT evidence urls, both
+    exactly as for text triples; with constant confidence the
+    (confidence desc, url asc) rank reduces to url asc.
 
     Subjects link through the SAME canonical map as text mentions (one
     normalized-surface join), so "Ada Lovelace" declared in a page's
@@ -341,45 +326,15 @@ def structured_canonical(
     appears in text.  Objects are literals: ``obj_id`` is NULL by
     design, never a fabricated entity.
 
-    With ``provenance_k``, bounded evidence urls are kept per triple;
-    declared confidence is constant 1.0, so the text path's
-    (confidence desc, url asc) top-k rank reduces to url asc — same
-    ordering contract as triples.aggregate_triples_with_provenance.
-
     Scale shape: one narrow scan of ``pages`` (operators.structured),
-    one partial-agg groupBy on the triple key, one unhinted join
+    the text path's aggregation on the triple key, one unhinted join
     against the canonical map (AQE broadcast when small — the same
     regime as every canon join in this module).
     """
     from .operators import structured as structured_ops
 
     st = structured_ops.extract_structured_triples(pages, **(structured_cfg or {}))
-    keys = ["subj_text", "pred", "obj_text", "subj_type"]
-    if provenance_k is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*keys).orderBy("url")
-        agg = (
-            st.withColumn("_rk", F.row_number().over(w))
-            .groupBy(*keys)
-            .agg(
-                F.count("*").cast("long").alias("n_evidence"),
-                F.array_sort(
-                    F.collect_list(
-                        F.when(F.col("_rk") <= provenance_k, F.col("url"))
-                    )
-                ).alias("evidence_urls"),
-            )
-            .select(
-                *keys,
-                F.lit("literal").alias("obj_type"),
-                "n_evidence",
-                F.lit(1.0).alias("confidence"),
-                "evidence_urls",
-            )
-        )
-    else:
-        agg = structured_ops.aggregate_structured_triples(st)
+    agg = _aggregate(structured_ops.as_scored_pairs(st), provenance_k)
     sn = linking.normalize_text(F.col("subj_text"))
     subj = canon_map.withColumnRenamed("norm", "_sn").withColumnRenamed(
         "canonical_id", "_cid"

@@ -123,8 +123,9 @@ class StageRunner:
         scan cost.
 
         Requires ``key`` to survive ``transform`` (true for every kgce
-        stage — mentions/pairs keep ``url``); when it does not, the wave
-        falls back to bucket-at-a-time filtered writes.
+        stage — mentions/pairs keep ``url``): the written buckets are
+        computed from it, so a transform that drops it raises
+        ``ValueError``.
         """
         _, ddir, mdir = self._paths(stage)
         self._pin_config(stage, {"n_buckets": self.n_buckets, "key": key, **(config or {})})
@@ -144,20 +145,18 @@ class StageRunner:
             t0 = time.monotonic()
             part = bucketed.filter(F.col("_bucket").isin(wave))
             out = transform(part.drop("_bucket"))
-            if key in out.columns:
-                # single-scan path: one job writes every wave bucket
-                (
-                    out.withColumn("bucket", bucket_col)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("bucket")
-                    .parquet(str(ddir))
+            if key not in out.columns:
+                raise ValueError(
+                    f"stage {stage!r}: transform dropped the bucket key {key!r}"
                 )
-            else:  # pragma: no cover - no kgce stage drops its key
-                for b in wave:
-                    transform(
-                        bucketed.filter(F.col("_bucket") == b).drop("_bucket")
-                    ).write.mode("overwrite").parquet(str(ddir / f"bucket={b}"))
+            # one job writes every wave bucket
+            (
+                out.withColumn("bucket", bucket_col)
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bucket")
+                .parquet(str(ddir))
+            )
             # per-bucket input hash: ONE key-column-pruned scan per wave
             hashes = {
                 r._bucket: r.h

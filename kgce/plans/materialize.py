@@ -291,10 +291,9 @@ def build_nodes(canon: DataFrame, mentions: DataFrame, n_buckets: int = 32) -> D
     """
     from pyspark.sql import Window
 
-    norm_mentions = mentions.select(
-        F.trim(F.regexp_replace(F.lower("text"), r"[^a-z0-9]+", " ")).alias("norm"),
-        "type",
-    )
+    from ..operators.linking import normalize_text
+
+    norm_mentions = mentions.select(normalize_text(F.col("text")).alias("norm"), "type")
     by_type = norm_mentions.groupBy("norm", "type").agg(F.count("*").alias("n"))
     totals = by_type.groupBy("norm").agg(F.sum("n").alias("n_mentions"))
     w = Window.partitionBy("norm").orderBy(F.desc("n"), "type")

@@ -268,14 +268,14 @@ def stream_triples_merge(
     equals the clean_pages-then-extract batch run (pinned in
     test_streaming).
 
-    ``structured`` unions the declared JSON-LD triples
-    (operators.structured) into each micro-batch's aggregate before
-    the merge — extracted AFTER the hygiene/LM gates, matching the
-    batch pipeline's extract-from-cleaned-pages stance.  Triple keys
-    are disjoint from the text path's (``sdo:`` preds, literal
-    objects), and the per-batch aggregate is the same associative
-    sum/max (+ bounded url-asc evidence under ``provenance_k``), so
-    stream == batch still holds."""
+    ``structured`` unions the declared JSON-LD triples, as scored
+    pairs (operators.structured.as_scored_pairs), into each
+    micro-batch's text pairs before the one aggregate — extracted AFTER
+    the hygiene/LM gates, matching the batch pipeline's
+    extract-from-cleaned-pages stance.  Triple keys are disjoint from
+    the text path's (``sdo:`` preds, literal objects), and the merge
+    is the same associative sum/max (+ bounded evidence under
+    ``provenance_k``), so stream == batch still holds."""
     from .operators import triples as triples_ops
     from .plans.materialize import merge_aggregated_triples
 
@@ -305,28 +305,24 @@ def stream_triples_merge(
             ).drop("_rk", "ppl")
             if batch_df.isEmpty():
                 return
-        if provenance_k is not None:
-            trips = triples_ops.aggregate_triples_with_evidence(
-                triples_ops.score_pairs(
-                    triples_ops.pairs_from_sentence_mentions(
-                        tagging.extract_sentence_mentions(batch_df)
-                    )
-                ),
-                k=provenance_k,
+        scored = triples_ops.score_pairs(
+            triples_ops.pairs_from_sentence_mentions(
+                tagging.extract_sentence_mentions(batch_df)
             )
-        else:
-            trips = triples_ops.extract_triples_hybrid(batch_df)
+        )
         if structured:
             from .operators import structured as structured_ops
 
-            st = structured_ops.extract_structured_triples(batch_df)
-            if provenance_k is not None:
-                st_agg = structured_ops.aggregate_structured_triples_with_evidence(
-                    st, k=provenance_k
-                )
-            else:
-                st_agg = structured_ops.aggregate_structured_triples(st)
-            trips = trips.unionByName(st_agg.select(*trips.columns))
+            scored = scored.unionByName(
+                structured_ops.as_scored_pairs(
+                    structured_ops.extract_structured_triples(batch_df)
+                ),
+                allowMissingColumns=True,
+            )
+        if provenance_k is not None:
+            trips = triples_ops.aggregate_triples_with_evidence(scored, k=provenance_k)
+        else:
+            trips = triples_ops.aggregate_triples(scored)
         merge_aggregated_triples(
             trips, out_path, epoch_id=epoch_id, provenance_k=provenance_k
         )

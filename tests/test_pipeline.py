@@ -519,6 +519,31 @@ def test_pipeline_structured_provenance_bounded(spark):
     assert brand[0].evidence_urls == ["http://p0.example/x", "http://p1.example/x"]
 
 
+def test_pipeline_structured_provenance_distinct_urls(spark):
+    """A page declaring the same triple in two JSON-LD blocks is one
+    evidence url, as in the text path: n_evidence counts both rows, the
+    top-k evidence lists each url once."""
+    from datetime import datetime
+
+    ld = ('<script type="application/ld+json">'
+          '{"@type": "Organization", "name": "Acme", "brand": "Anvils"}'
+          "</script>")
+    rows = []
+    for i in range(3):
+        blocks = ld * (2 if i == 0 else 1)
+        rows.append({"url": f"http://p{i}.example/x",
+                     "warc_ts": datetime(2024, 1, 1),
+                     "html": f"<html><body>Acme Anvils.{blocks}</body></html>".encode(),
+                     "text": "Acme ships anvils.", "lang": "en"})
+    pages = spark.createDataFrame(rows, schema=schemas.PAGES)
+    out = pipeline.run(pages, provenance_k=2, structured=True)
+    brand = [r for r in out["triples"].collect()
+             if r.pred == "sdo:brand" and r.subj_text == "Acme"]
+    assert len(brand) == 1
+    assert brand[0].n_evidence == 4
+    assert brand[0].evidence_urls == ["http://p0.example/x", "http://p1.example/x"]
+
+
 def test_pipeline_run_with_embeddings(spark):
     """embed= trains TransE over the produced edges and attaches the
     learned vector to every entity node (embedding column, unit norm,

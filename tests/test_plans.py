@@ -148,15 +148,15 @@ def test_canonical_map_join_is_unhinted(spark):
     shuffle join (this is what saves the job at 10^12 pages); with the
     default threshold AQE still broadcasts the genuinely-small map at
     runtime.  Results must be identical either way."""
-    from kgce import pipeline, tagging
+    from kgce import pipeline
     from kgce.operators import boilerplate
 
-    mentions = tagging.extract_mentions(_pages(spark, 10))
+    pages = _pages(spark, 10)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        trips = pipeline.canonical_triples(mentions)
+        trips = pipeline.run(pages)["triples"]
         shuffle_rows = sorted(map(tuple, trips.collect()))
         plan = _plan(trips)  # finalized adaptive plan after execution
         assert "BroadcastHashJoin" not in plan and "BroadcastExchange" not in plan
@@ -172,7 +172,7 @@ def test_canonical_map_join_is_unhinted(spark):
         spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
 
     # default regime: the small map broadcasts (statically or via AQE)
-    trips2 = pipeline.canonical_triples(mentions)
+    trips2 = pipeline.run(pages)["triples"]
     bcast_rows = sorted(map(tuple, trips2.collect()))
     assert "BroadcastHashJoin" in _plan(trips2)
     assert bcast_rows == shuffle_rows

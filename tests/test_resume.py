@@ -113,6 +113,18 @@ def test_config_mismatch_refuses_resume(spark, tmp_path):
         runner.run("s", pages, tagging.extract_mentions, key="url", config={"v": 2})
 
 
+def test_transform_dropping_key_is_refused(spark, tmp_path):
+    """The written buckets are computed from ``key``: a transform that
+    drops it is refused, naming the stage and the key, before any
+    bucket is written or acknowledged."""
+    pages = _pages(spark, 10)
+    runner = StageRunner(spark, str(tmp_path / "wd"), n_buckets=2)
+    with pytest.raises(ValueError, match="'keyless'.*'url'"):
+        runner.run("keyless", pages, lambda df: df.drop("url"), key="url")
+    assert runner.completed_buckets("keyless") == set()
+    assert not (tmp_path / "wd" / "keyless" / "data").exists()
+
+
 def test_run_global_caches_and_resumes(spark, tmp_path):
     runner = StageRunner(spark, str(tmp_path / "wd"), n_buckets=2)
     calls = []

@@ -419,8 +419,8 @@ def test_stream_lm_gate_composes_with_triples_merge(spark, tmp_path):
 
 def test_stream_structured_triples_merge(spark, tmp_path):
     """Declared JSON-LD triples union into the streamed KG merge: the
-    two-wave stream equals one batch run (text extract + structured
-    aggregate over the union), including exact bounded evidence when k
+    two-wave stream equals one batch run (text and declared scored
+    pairs through one aggregate), including exact bounded evidence when k
     covers every key's distinct urls.  sdo: keys are disjoint from the
     text path's, so neither contaminates the other's aggregates."""
     from kgce import tagging
@@ -445,10 +445,9 @@ def test_stream_structured_triples_merge(spark, tmp_path):
 
     wave1 = with_ld(synth.gen_pages(12, seed=85))
     wave2 = with_ld(synth.gen_pages(8, seed=86))
-    for p in wave2:  # recrawl waves are url-disjoint here: the batch
-        # twin ranks evidence by row, the stream merge per url — equal
-        # only when each url asserts once (re-crawl updates are the
-        # delta operator's job, not the append-only stream's)
+    for p in wave2:  # recrawl waves are url-disjoint here (re-crawl
+        # updates are the delta operator's job, not the append-only
+        # stream's)
         p["url"] = p["url"].replace("/page/", "/w2/page/")
     union_pages = spark.createDataFrame(wave1 + wave2, schema=schemas.PAGES)
 
@@ -478,18 +477,19 @@ def test_stream_structured_triples_merge(spark, tmp_path):
         )
 
     got = norm(spark.read.parquet(out).collect())
-    text = triples_ops.aggregate_triples_with_evidence(
-        triples_ops.score_pairs(
-            triples_ops.pairs_from_sentence_mentions(
-                tagging.extract_sentence_mentions(union_pages)
-            )
-        ),
-        k=k,
+    text = triples_ops.score_pairs(
+        triples_ops.pairs_from_sentence_mentions(
+            tagging.extract_sentence_mentions(union_pages)
+        )
     )
-    st = structured_ops.aggregate_structured_triples_with_evidence(
-        structured_ops.extract_structured_triples(union_pages), k=k
+    st = structured_ops.as_scored_pairs(
+        structured_ops.extract_structured_triples(union_pages)
     )
-    want = norm(text.unionByName(st.select(*text.columns)).collect())
+    want = norm(
+        triples_ops.aggregate_triples_with_evidence(
+            text.unionByName(st, allowMissingColumns=True), k=k
+        ).collect()
+    )
     assert got == want and len(got) > 0
     # declared rows actually present, asserted by every LD page
     sdo = [g for g in got if g[1] == "sdo:jobTitle"]

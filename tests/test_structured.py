@@ -197,11 +197,14 @@ def test_jsonld_matches_duckdb_oracle(spark, pages_df):
     assert got == want and len(got) >= 10
 
 
-def test_aggregate_structured_triples_merges_with_text_schema(spark, pages_df):
-    """The structured aggregate unions with the text-triple aggregate
-    schema and merges through the same edges-table path."""
-    agg = structured.aggregate_structured_triples(
-        structured.extract_structured_triples(pages_df)
+def test_declared_pairs_aggregate_merges_with_text_schema(spark, pages_df):
+    """Declared triples, as scored pairs, aggregate through the text
+    path's aggregate_triples into the text-triple schema and merge
+    through the same edges-table path."""
+    from kgce.operators import triples as triples_ops
+
+    agg = triples_ops.aggregate_triples(
+        structured.as_scored_pairs(structured.extract_structured_triples(pages_df))
     )
     assert agg.columns == [
         "subj_text", "pred", "obj_text", "subj_type", "obj_type",
