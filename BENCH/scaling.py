@@ -31,7 +31,6 @@ RUN_SNIPPET = r"""
 import json, os, sys, time
 sys.path.insert(0, {repo!r})
 from kgce.session import get_spark
-from kgce import tagging
 from kgce.operators import triples as triples_ops
 from pyspark.sql import functions as F
 
@@ -49,11 +48,7 @@ pages = (
 )
 pages = pages.repartition(cores * 8).cache()
 pages.count()  # warm: materialize input, JIT, python workers
-form = os.environ.get("KGCE_FORM", "hybrid")
-job = (
-    triples_ops.extract_triples_hybrid if form == "hybrid"
-    else triples_ops.extract_triples_fused
-)(pages)
+job = triples_ops.extract_triples_hybrid(pages)
 n = job.count()  # warm-up pass compiles codegen + spins python workers
 walls = []
 for _ in range(3):
@@ -66,16 +61,14 @@ print(json.dumps({{"cores": cores, "wall_sec": wall, "triples": n,
 """
 
 
-def run_at(cores: int, sf_dir: str, cpu_base: int = 16, form: str = "hybrid") -> dict:
+def run_at(cores: int, sf_dir: str, cpu_base: int = 16) -> dict:
     """Run the measured job in a fresh JVM pinned to exactly ``cores``
     PHYSICAL cpus (taskset over the whole process tree — JVM threads AND
     Python workers).  Without pinning, local[N]'s Arrow-pipelined
     Python+JVM overlap burns up to 2N cores, silently inflating the
     low-parallelism throughput and deflating measured scaling."""
     cpus = ",".join(str(cpu_base + i) for i in range(cores))
-    env = dict(
-        os.environ, KGCE_CORES=str(cores), SPARK_GRAFT_SF_DIR=sf_dir, KGCE_FORM=form
-    )
+    env = dict(os.environ, KGCE_CORES=str(cores), SPARK_GRAFT_SF_DIR=sf_dir)
     load1 = os.getloadavg()[0]
     out = subprocess.run(
         ["taskset", "-c", cpus, sys.executable, "-c", RUN_SNIPPET.format(repo=str(REPO))],
@@ -86,25 +79,6 @@ def run_at(cores: int, sf_dir: str, cpu_base: int = 16, form: str = "hybrid") ->
     )
     line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
     return {**json.loads(line), "load1": round(load1, 2)}
-
-
-def _form_table(lo, hi, eff, flo, fhi, feff) -> str:
-    if not flo:
-        return ""
-    return f"""## Flagship-form comparison (same harness, same run, pinned)
-
-| form | T(local[{lo['cores']}]) | T(local[{hi['cores']}]) | efficiency | note |
-|---|---|---|---|---|
-| hybrid (Python tag, JVM pairs) | {lo['wall_sec']:.1f} s | {hi['wall_sec']:.1f} s | {eff:.3f} | flagship |
-| fused (all-Python pairs)       | {flo['wall_sec']:.1f} s | {fhi['wall_sec']:.1f} s | {feff:.3f} | kept as graded twin |
-
-The hybrid form is faster in absolute wall time AND scales at least as
-well — the O(k²) pair loop moves from Python into whole-stage-codegen'd
-posexplode, so per-core work is smaller and the Python workers stay
-saturated with pure tagging.  Both forms stay graded queries
-(`pipeline_triples`, `pipeline_triples_hybrid`) against the same DuckDB
-oracle, so the equivalence is re-proven by the driver every round.
-"""
 
 
 def main() -> None:
@@ -118,25 +92,14 @@ def main() -> None:
     # min-of-3) would skew the ratio.  Interleaving gives both levels the
     # same exposure to each noise window.
     rounds = int(os.environ.get("KGCE_ROUNDS", "2"))
-    measure_fused = os.environ.get("KGCE_MEASURE_FUSED", "1") != "0"
-    lo_runs, hi_runs, flo_runs, fhi_runs = [], [], [], []
+    lo_runs, hi_runs = [], []
     for _ in range(rounds):
         lo_runs.append(run_at(n_lo, sf_dir))
         hi_runs.append(run_at(n_hi, sf_dir))
-        if measure_fused:
-            # fused pairs INSIDE the interleave: a single fused pair
-            # (r4's first try) landed in one noise window and recorded
-            # 0.636 while the interleaved hybrid read 0.847 — both
-            # forms get the same exposure now, min per level
-            flo_runs.append(run_at(n_lo, sf_dir, form="fused"))
-            fhi_runs.append(run_at(n_hi, sf_dir, form="fused"))
     lo = min(lo_runs, key=lambda r: r["wall_sec"])
     hi = min(hi_runs, key=lambda r: r["wall_sec"])
     loads = [r["load1"] for r in lo_runs + hi_runs]
     eff = (lo["wall_sec"] / hi["wall_sec"]) / (n_hi / n_lo)
-    flo = min(flo_runs, key=lambda r: r["wall_sec"]) if flo_runs else None
-    fhi = min(fhi_runs, key=lambda r: r["wall_sec"]) if fhi_runs else None
-    feff = (flo["wall_sec"] / fhi["wall_sec"]) / (n_hi / n_lo) if flo else None
     result = {
         "sf_dir": sf_dir,
         "loN": {k: round(v, 2) for k, v in lo.items()},
@@ -147,12 +110,6 @@ def main() -> None:
         "rounds": rounds,
         "load1_at_launches": loads,
     }
-    if flo:
-        result["fused"] = {
-            "loN_wall": round(flo["wall_sec"], 2),
-            "lo4N_wall": round(fhi["wall_sec"], 2),
-            "efficiency": round(feff, 3),
-        }
     print(json.dumps(result))
     md = f"""# BENCH/BASELINE — measured scaling evidence
 
@@ -187,7 +144,6 @@ pair generation -> partial-aggregated triple groupBy); its only wide
 shuffle is the 63k-key triple aggregation, so the scaling profile is
 CPU-dominated — the same profile a real cluster would see per-executor.
 
-{_form_table(lo, hi, eff, flo, fhi, feff)}
 Launch-mode + checkpoint-resume evidence: BENCH/SUBMIT.md.
 """
     (REPO / "BENCH" / "BASELINE.md").write_text(md)

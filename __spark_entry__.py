@@ -1,11 +1,11 @@
 """Driver contract for the kgce PySpark KG-construction engine.
 
-``entry(spark)``    — flagship fused pipeline (pages -> mentions -> triples)
+``entry(spark)``    — flagship hybrid pipeline (pages -> mentions -> triples)
                       over sf0.001 documents-as-pages.
 ``queries()``       — one callable per implemented operator family from
                       SURVEY.md §2 (+ the training-data-pipeline ops).
 ``oracle_sql()``    — DuckDB-equivalent ANSI SQL for EVERY query — full
-                      replicas of the fused pipeline (sentence-split CTE),
+                      replicas of the triple pipeline (sentence-split CTE),
                       connected components (recursive min-label closure),
                       md5-SimHash bit math, md5-lattice SRP-LSH, the
                       complete BioEval harness (incl. the one-credit
@@ -72,9 +72,9 @@ def entry(spark: SparkSession) -> DataFrame:
     """documents-as-pages -> mention detection -> aggregated triples.
 
     Flagship = the HYBRID form (Python tags sentences, JVM posexplode
-    generates the O(k²) pairs, partial-agg shuffle only): measured ~25%
-    faster than the fully-fused form at sf0.1/local[32] with identical
-    output (both forms stay graded queries below)."""
+    generates the O(k²) pairs, partial-agg shuffle only).  It shares its
+    pair core with the pipeline's grouped form; both are graded queries
+    below (``pipeline_triples_hybrid``, ``pipeline_triples``)."""
     docs = _t(spark, "/root/testdata/sf0.001", "documents")
     pages = docs.select(
         F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"),
@@ -94,7 +94,7 @@ def q_mentions_decode(spark, sf):
 
 def q_mention_pair_preds(spark, sf):
     # J9's TRUE self-join form stays (property-equal to the grouped and
-    # fused forms) — but off a MATERIALIZED mention table: the two
+    # hybrid forms) — but off a MATERIALIZED mention table: the two
     # renamed projections defeat exchange reuse, so the lazy form ran
     # the document_mentions window chain once per join side
     m = checkpoint(
@@ -710,24 +710,31 @@ def q_ivf_topk(spark, sf):
 
 
 def q_pipeline_triples(spark, sf):
-    """Full fused pipeline (sentence split -> tag -> decode -> pair -> agg),
-    graded against a DuckDB CTE replica of the whole chain.  confidence is
-    projected out: it is a function of char offsets, which SQL cannot
+    """The triple chain ``pipeline.run`` runs (sentence split -> tag ->
+    decode -> mentions table -> per-sentence grouped pairs -> agg),
+    graded against a DuckDB CTE replica of the whole chain.  confidence
+    is projected out: it is a function of char offsets, which SQL cannot
     recover after regex splitting (covered instead by pytest vs the
     Python oracle)."""
+    from kgce import tagging
+
     docs = _t(spark, sf, "documents")
     pages = docs.select(
         F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"), "text"
     )
-    return triples_ops.extract_triples_fused(pages).select(
+    scored = triples_ops.score_pairs(
+        triples_ops.candidate_pairs_grouped(tagging.extract_mentions(pages))
+    )
+    return triples_ops.aggregate_triples(scored).select(
         "subj_text", "subj_type", "pred", "obj_text", "obj_type", "n_evidence"
     )
 
 
 def q_pipeline_triples_hybrid(spark, sf):
-    """Property-equal hybrid form (JVM-side pair generation) graded
-    against the SAME DuckDB oracle — the driver proves fused == hybrid ==
-    SQL semantics every round."""
+    """The hybrid form (per-sentence mention arrays straight from the
+    tagging UDF, same JVM pair core) graded against the SAME DuckDB
+    oracle — the driver proves pipeline == hybrid == SQL semantics
+    every round."""
     docs = _t(spark, sf, "documents")
     pages = docs.select(
         F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"), "text"

@@ -37,7 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 HEADLINE = [
     "pipeline_full",          # COMPOSED job: clean -> extract -> link -> triples
     "pipeline_triples_hybrid",  # flagship: Python tags, JVM pairs
-    "pipeline_triples",       # fused UDF form (round-over-round diff)
+    "pipeline_triples",       # pipeline.run's form: mentions table -> grouped pairs
     "mentions_decode",        # window-based decode
     "triples_agg",            # self-join + aggregation
     "q1_pricing_summary",     # scan-heavy aggregation

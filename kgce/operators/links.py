@@ -319,7 +319,6 @@ def pagerank(
     n = nodes.count()  # one small job; the node table is O(hosts)
     nodes = nodes.repartition("node").persist()
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    prev = None
     for it in range(iters):
         # O(nodes); truncates ALL lineage
         contribs = checkpoint(
@@ -329,11 +328,6 @@ def pagerank(
             .groupBy(F.col("_d").alias("node"))
             .agg(F.sum(F.col("rank") * F.col("_w")).alias("_in"))
         )
-        # prev iteration's checkpoint is unreachable once the new one is
-        # materialized (this iteration's ranks read only `contribs`)
-        if prev is not None:
-            prev.unpersist()
-        prev = contribs
         # dangling mass = 1 - mass that flowed along edges: exact, the
         # 1-row aggregate rides the next job as a crossJoined scalar
         # read off the checkpoint — no per-iteration .first() driver

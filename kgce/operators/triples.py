@@ -1,14 +1,20 @@
-"""Triple extraction: mention-pair self-join -> scored (subj, pred, obj).
+"""Triple extraction: sentence mention pairs -> scored (subj, pred, obj).
 
 J9 (SURVEY.md §2.3): sentence-scoped self-join
 ``m1 ⋈ m2 ON url, sent_id AND m1.mention_id < m2.mention_id`` — the theta
 half of the condition rides on the page-wide mention numbering, which is
 ordered by (start, end), so subj is always the left-most mention of the
 pair (the reference's brat numbering order, output_format_converter.py:212).
+That join (:func:`candidate_pairs`) is the test reference.  Every
+production path generates pairs with ONE core,
+:func:`pairs_from_sentence_mentions`, over per-sentence mention arrays:
+the pipeline groups its mentions table per sentence
+(:func:`candidate_pairs_grouped`); the hybrid, delta and streaming paths
+take the arrays straight from ``tagging.extract_sentence_mentions``.
 
 Scale notes:
-* the equi-keys (url, sent_id) make this ONE shuffle; AQE skew-join
-  splitting (enabled in kgce.session) breaks up hot sentences/pages.
+* the grouping keys (url, sent_id) make the grouped form ONE shuffle
+  (the hybrid form needs none before the triple aggregation).
 * pages from hot domains can be pre-spread with
   ``kgce.plans.skew.salted_repartition`` before mention extraction so no
   single task owns a whole domain.
@@ -22,8 +28,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def candidate_pairs(mentions: DataFrame, max_pair_distance: int | None = None) -> DataFrame:
-    """Sentence-co-occurring mention pairs (subj = left-most)."""
+def candidate_pairs(mentions: DataFrame) -> DataFrame:
+    """Sentence-co-occurring mention pairs (subj = left-most): the J9
+    self-join, kept as the reference the pipeline's
+    :func:`candidate_pairs_grouped` is tested against."""
     m1 = mentions.select(
         "url",
         "sent_id",
@@ -42,53 +50,54 @@ def candidate_pairs(mentions: DataFrame, max_pair_distance: int | None = None) -
         F.col("start").alias("obj_start"),
         F.col("end").alias("obj_end"),
     )
-    pairs = m1.join(m2, on=["url", "sent_id"]).filter(F.col("subj_mid") < F.col("obj_mid"))
-    if max_pair_distance is not None:
-        pairs = pairs.filter((F.col("obj_start") - F.col("subj_end")) <= max_pair_distance)
-    return pairs
+    return m1.join(m2, on=["url", "sent_id"]).filter(F.col("subj_mid") < F.col("obj_mid"))
+
+
+def pairs_from_sentence_mentions(sent_mentions: DataFrame) -> DataFrame:
+    """The O(k²) pair generator, from per-sentence mention arrays ``ms``
+    ordered by (start, end): double posexplode + index filter —
+    whole-stage-codegen'd Generate, no shuffle, no Python.  Output schema
+    == candidate_pairs minus the mention ids (the array order IS the id
+    order)."""
+    e1 = sent_mentions.select(
+        "url", "sent_id", "ms", F.posexplode("ms").alias("i", "a")
+    )
+    e2 = e1.select(
+        "url", "sent_id", "i", "a", F.posexplode("ms").alias("j", "b")
+    ).filter(F.col("j") > F.col("i"))
+    return e2.select(
+        "url",
+        "sent_id",
+        F.col("a.text").alias("subj_text"),
+        F.col("a.type").alias("subj_type"),
+        F.col("a.start").alias("subj_start"),
+        F.col("a.end").alias("subj_end"),
+        F.col("b.text").alias("obj_text"),
+        F.col("b.type").alias("obj_type"),
+        F.col("b.start").alias("obj_start"),
+        F.col("b.end").alias("obj_end"),
+    )
 
 
 def candidate_pairs_grouped(mentions: DataFrame) -> DataFrame:
-    """Same output as candidate_pairs, via groupBy+explode instead of a
-    self-join.
+    """Same pairs as candidate_pairs (minus the mention ids), via one
+    per-sentence groupBy and :func:`pairs_from_sentence_mentions` instead
+    of a self-join.
 
     Why: the mentions DataFrame is produced by an expensive Python UDF; a
     self-join evaluates that UDF subtree TWICE (the pre-join projections
     defeat exchange reuse).  Grouping per sentence shuffles the UDF
-    output once and generates the O(k²) pairs JVM-side with array
-    combinators.  Hot sentences still skew a task, but the work per
-    sentence is identical to the join's — minus a full second UDF pass.
+    output once, and the mention arrays stay factorized until the core
+    expands them JVM-side.  Hot sentences still skew a task, but the work
+    per sentence is identical to the join's — minus a full second UDF
+    pass.
     """
+    # sorting the structs by their leading mention_id restores (start, end)
     ms = F.array_sort(
-        F.collect_list(
-            F.struct("mention_id", "text", "type", "start", "end")
-        )
+        F.collect_list(F.struct("mention_id", "text", "type", "start", "end"))
     )
-    per_sent = mentions.groupBy("url", "sent_id").agg(ms.alias("ms"))
-    # pairs[i] = struct(a=ms[i], b) for every b after i — (x, i) indexed
-    # lambda is intentional here (the second param IS the array index)
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ms"),
-            lambda a, i: F.transform(
-                F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                lambda b: F.struct(a.alias("a"), b.alias("b")),
-            ),
-        )
-    )
-    return per_sent.select("url", "sent_id", F.explode(pair_arr).alias("p")).select(
-        "url",
-        "sent_id",
-        F.col("p.a.mention_id").alias("subj_mid"),
-        F.col("p.a.text").alias("subj_text"),
-        F.col("p.a.type").alias("subj_type"),
-        F.col("p.a.start").alias("subj_start"),
-        F.col("p.a.end").alias("subj_end"),
-        F.col("p.b.mention_id").alias("obj_mid"),
-        F.col("p.b.text").alias("obj_text"),
-        F.col("p.b.type").alias("obj_type"),
-        F.col("p.b.start").alias("obj_start"),
-        F.col("p.b.end").alias("obj_end"),
+    return pairs_from_sentence_mentions(
+        mentions.groupBy("url", "sent_id").agg(ms.alias("ms"))
     )
 
 
@@ -230,49 +239,6 @@ def aggregate_triples_with_provenance(scored: DataFrame, k: int = 3) -> DataFram
     return ev.withColumn(
         "evidence_urls", F.transform("evidence", lambda s: s["url"])
     ).drop("evidence")
-
-
-def extract_triples(mentions: DataFrame, max_pair_distance: int | None = None) -> DataFrame:
-    if max_pair_distance is not None:
-        return aggregate_triples(score_pairs(candidate_pairs(mentions, max_pair_distance)))
-    return aggregate_triples(score_pairs(candidate_pairs_grouped(mentions)))
-
-
-def extract_triples_fused(pages: DataFrame, tagger: str = "rule") -> DataFrame:
-    """pages -> aggregated triples with ONE narrow UDF stage and ONE small
-    shuffle (the partial-aggregated groupBy over
-    (subj_text, pred, obj_text)).  The deployment-shape flagship: at
-    10^12 pages every other formulation shuffles mention-sized data;
-    this one shuffles only per-partition triple partials.
-    """
-    from .. import tagging
-
-    return aggregate_triples(tagging.extract_pairs_fused(pages, tagger))
-
-
-def pairs_from_sentence_mentions(sent_mentions: DataFrame) -> DataFrame:
-    """JVM-side O(k²) pair generation from per-sentence mention arrays:
-    double posexplode + index filter — whole-stage-codegen'd Generate,
-    no shuffle, no Python.  Output schema == candidate_pairs_grouped
-    minus mention ids (the array order IS the id order)."""
-    e1 = sent_mentions.select(
-        "url", "sent_id", "ms", F.posexplode("ms").alias("i", "a")
-    )
-    e2 = e1.select(
-        "url", "sent_id", "i", "a", F.posexplode("ms").alias("j", "b")
-    ).filter(F.col("j") > F.col("i"))
-    return e2.select(
-        "url",
-        "sent_id",
-        F.col("a.text").alias("subj_text"),
-        F.col("a.type").alias("subj_type"),
-        F.col("a.start").alias("subj_start"),
-        F.col("a.end").alias("subj_end"),
-        F.col("b.text").alias("obj_text"),
-        F.col("b.type").alias("obj_type"),
-        F.col("b.start").alias("obj_start"),
-        F.col("b.end").alias("obj_end"),
-    )
 
 
 def extract_triples_hybrid(pages: DataFrame, tagger: str = "rule") -> DataFrame:

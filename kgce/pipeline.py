@@ -305,7 +305,6 @@ def structured_canonical(
     pages: DataFrame,
     canon_map: DataFrame,
     provenance_k: int | None = None,
-    structured_cfg: dict | None = None,
 ) -> DataFrame:
     """Declared (schema.org JSON-LD) triples in the canonical-edges
     schema, union-compatible with the text triples of :func:`run`.
@@ -333,7 +332,7 @@ def structured_canonical(
     """
     from .operators import structured as structured_ops
 
-    st = structured_ops.extract_structured_triples(pages, **(structured_cfg or {}))
+    st = structured_ops.extract_structured_triples(pages)
     agg = _aggregate(structured_ops.as_scored_pairs(st), provenance_k)
     sn = linking.normalize_text(F.col("subj_text"))
     subj = canon_map.withColumnRenamed("norm", "_sn").withColumnRenamed(

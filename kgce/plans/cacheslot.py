@@ -12,10 +12,11 @@ call, the last one via ``release()``.
 Thread-safety (ADVICE r3): the swap is lock-guarded, so two threads
 calling the owning operator concurrently can never double-unpersist or
 leak a frame.  What a lock CANNOT fix is the single-consumer semantics:
-call B releases call A's base, so if A's result is still lazy its
-subtree recomputes on materialization — correct, just slower (persist
-keeps lineage).  When composing two results of the same operator in one
-plan, materialize the first before the second call.
+call B releases call A's base (unless both bases have the same plan and
+so share one cache entry), so if A's result is still lazy its subtree
+recomputes on materialization — correct, just slower (persist keeps
+lineage).  When composing two results of the same operator in one plan,
+materialize the first before the second call.
 """
 
 from __future__ import annotations
@@ -32,10 +33,13 @@ class CacheSlot:
 
     def swap(self, df: DataFrame | None) -> None:
         """Install ``df`` (already persisted by the caller) as the live
-        frame, releasing the previous occupant."""
+        frame, releasing the previous occupant — unless both have the
+        same plan: Spark keeps ONE cache entry per plan, so a repeat
+        call's ``persist`` reuses the previous entry, and unpersisting
+        the previous frame would drop ``df``'s cache too."""
         with self._lock:
             prev, self._df = self._df, df
-        if prev is not None:
+        if prev is not None and (df is None or not prev.sameSemantics(df)):
             prev.unpersist(blocking=False)
 
     def release(self) -> None:

@@ -192,7 +192,7 @@ class StageRunner:
             self.spark.createDataFrame(rows, manifest_schema).write.mode("append").parquet(
                 str(mdir)
             )
-        return self.spark.read.option("basePath", str(ddir)).parquet(str(ddir / "bucket=*"))
+        return self.spark.read.parquet(str(ddir))
 
     def run_global(
         self,

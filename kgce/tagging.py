@@ -21,6 +21,7 @@ output_format_converter.py:156-191 (tag2entity -> mentions).
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
+from itertools import groupby
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -177,6 +178,33 @@ def tag_sentences(
 # --------------------------------------------------------------------------
 
 
+def _page_mentions(pdf: pd.DataFrame, tag_fn: TagFn) -> Iterator[tuple[str, list[tuple]]]:
+    """The decode loop: (url, mentions) per page of one Arrow batch, each
+    mention a (sent_id, text, type, start, end) tuple, sorted by
+    (start, end) — the brat ``T1..Tn`` order (W7).  Sentences arrive
+    page-contiguous, so grouping on url restores pages (one input row ==
+    one page, and a page never spans UDF batches).  Pages without a
+    mention yield nothing."""
+    for url, page in groupby(_tagged_page_sentences(pdf, tag_fn), key=lambda t: t[0]):
+        ms = [
+            (sid, sp.text, sp.etype, sp.char_s, sp.char_e)
+            for _, sid, words, offs, labels in page
+            for sp in oracle.decode_spans_converter(words, offs, labels)
+        ]
+        if ms:
+            ms.sort(key=lambda m: (m[3], m[4]))
+            yield url, ms
+
+
+def _mention_rows(pdf: pd.DataFrame, tag_fn: TagFn) -> list[tuple]:
+    """``schemas.MENTIONS`` rows, mention_id numbered per page."""
+    return [
+        (url, sid, mid, text, s, e, etype)
+        for url, ms in _page_mentions(pdf, tag_fn)
+        for mid, (sid, text, etype, s, e) in enumerate(ms, start=1)
+    ]
+
+
 def extract_mentions(pages: DataFrame, tagger: str = "rule") -> DataFrame:
     """Fused split+tokenize+tag+repair+decode in one narrow stage.
 
@@ -186,29 +214,10 @@ def extract_mentions(pages: DataFrame, tagger: str = "rule") -> DataFrame:
     """
 
     def mention_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from itertools import groupby
-
         tag_fn = get_tagger(tagger)
+        cols = schemas.MENTIONS.fieldNames()
         for pdf in it:
-            rows = {k: [] for k in ("url", "sent_id", "mention_id", "text",
-                                    "start", "end", "type")}
-            tagged = _tagged_page_sentences(pdf, tag_fn)
-            # sentences arrive page-contiguous, so groupby restores pages
-            for url, page in groupby(tagged, key=lambda t: t[0]):
-                page_ms = []
-                for _, sid, words, offs, labels in page:
-                    for sp in oracle.decode_spans_converter(words, offs, labels):
-                        page_ms.append((sid, sp.text, sp.char_s, sp.char_e, sp.etype))
-                page_ms.sort(key=lambda m: (m[2], m[3]))
-                for mid, (sid, mtext, ms, me, mt) in enumerate(page_ms, start=1):
-                    rows["url"].append(url)
-                    rows["sent_id"].append(sid)
-                    rows["mention_id"].append(mid)
-                    rows["text"].append(mtext)
-                    rows["start"].append(ms)
-                    rows["end"].append(me)
-                    rows["type"].append(mt)
-            yield pd.DataFrame(rows)
+            yield pd.DataFrame(_mention_rows(pdf, tag_fn), columns=cols)
 
     return pages.select("url", "text").mapInPandas(mention_batches, schema=schemas.MENTIONS)
 
@@ -237,84 +246,17 @@ def extract_mentions_with_ts(pages: DataFrame, tagger: str = "rule") -> DataFram
     )
 
     def mention_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from itertools import groupby
-
         tag_fn = get_tagger(tagger)
+        cols = schemas.MENTIONS.fieldNames()
         for pdf in it:
             ts_by_url = dict(zip(pdf["url"], pdf["warc_ts"]))
-            rows = {k: [] for k in ("url", "sent_id", "mention_id", "text",
-                                    "start", "end", "type", "warc_ts")}
-            tagged = _tagged_page_sentences(pdf, tag_fn)
-            for url, page in groupby(tagged, key=lambda t: t[0]):
-                page_ms = []
-                for _, sid, words, offs, labels in page:
-                    for sp in oracle.decode_spans_converter(words, offs, labels):
-                        page_ms.append((sid, sp.text, sp.char_s, sp.char_e, sp.etype))
-                page_ms.sort(key=lambda m: (m[2], m[3]))
-                for mid, (sid, mtext, ms, me, mt) in enumerate(page_ms, start=1):
-                    rows["url"].append(url)
-                    rows["sent_id"].append(sid)
-                    rows["mention_id"].append(mid)
-                    rows["text"].append(mtext)
-                    rows["start"].append(ms)
-                    rows["end"].append(me)
-                    rows["type"].append(mt)
-                    rows["warc_ts"].append(ts_by_url[url])
-            yield pd.DataFrame(rows)
+            out = pd.DataFrame(_mention_rows(pdf, tag_fn), columns=cols)
+            out["warc_ts"] = out["url"].map(ts_by_url)
+            yield out
 
     return pages.select("url", "warc_ts", "text").mapInPandas(
         mention_batches, schema=schema
     )
-
-
-# --------------------------------------------------------------------------
-# pages -> scored mention pairs, fully fused (the 100-TB path)
-# --------------------------------------------------------------------------
-
-PAIRS_SCHEMA = (
-    "url string, sent_id long, subj_text string, subj_type string, "
-    "pred string, obj_text string, obj_type string, confidence double"
-)
-
-
-def extract_pairs_fused(pages: DataFrame, tagger: str = "rule") -> DataFrame:
-    """Sentence-co-occurring mention pairs in the SAME narrow stage as
-    mention detection — no shuffle between the page scan and the triple
-    aggregation's partial (map-side) agg.
-
-    Pair semantics are identical to operators.triples.candidate_pairs +
-    score_pairs (property-tested); use those relational forms when the
-    mentions table is already materialized — use this fused form when
-    pages stream straight through, which is the 10^12-page deployment
-    shape: the only wide shuffle left in the whole triple pipeline is the
-    final groupBy over (subj, pred, obj) partials.
-    """
-
-    def pair_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tag_fn = get_tagger(tagger)
-        for pdf in it:
-            rows = {k: [] for k in ("url", "sent_id", "subj_text", "subj_type",
-                                    "pred", "obj_text", "obj_type", "confidence")}
-            for url, sid, words, offs, labels in _tagged_page_sentences(pdf, tag_fn):
-                ms = sorted(
-                    oracle.decode_spans_converter(words, offs, labels),
-                    key=lambda sp: (sp.char_s, sp.char_e),
-                )
-                for i in range(len(ms)):
-                    for j in range(i + 1, len(ms)):
-                        a, b = ms[i], ms[j]
-                        gap = max(b.char_s - a.char_e, 0)
-                        rows["url"].append(url)
-                        rows["sent_id"].append(sid)
-                        rows["subj_text"].append(a.text)
-                        rows["subj_type"].append(a.etype)
-                        rows["pred"].append(f"rel:{a.etype}_{b.etype}")
-                        rows["obj_text"].append(b.text)
-                        rows["obj_type"].append(b.etype)
-                        rows["confidence"].append(1.0 / (1.0 + gap / 100.0))
-            yield pd.DataFrame(rows)
-
-    return pages.select("url", "text").mapInPandas(pair_batches, schema=PAIRS_SCHEMA)
 
 
 SENT_MENTIONS_SCHEMA = (
@@ -335,19 +277,12 @@ def extract_sentence_mentions(pages: DataFrame, tagger: str = "rule") -> DataFra
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tag_fn = get_tagger(tagger)
         for pdf in it:
-            rows = {"url": [], "sent_id": [], "ms": []}
-            for url, sid, words, offs, labels in _tagged_page_sentences(pdf, tag_fn):
-                ms = sorted(
-                    (
-                        (sp.text, sp.etype, sp.char_s, sp.char_e)
-                        for sp in oracle.decode_spans_converter(words, offs, labels)
-                    ),
-                    key=lambda m: (m[2], m[3]),
-                )
-                if ms:
-                    rows["url"].append(url)
-                    rows["sent_id"].append(sid)
-                    rows["ms"].append(ms)
-            yield pd.DataFrame(rows)
+            rows = []
+            for url, ms in _page_mentions(pdf, tag_fn):
+                by_sent: dict[int, list[tuple]] = {}
+                for sid, text, etype, s, e in ms:
+                    by_sent.setdefault(sid, []).append((text, etype, s, e))
+                rows.extend((url, sid, sent_ms) for sid, sent_ms in by_sent.items())
+            yield pd.DataFrame(rows, columns=["url", "sent_id", "ms"])
 
     return pages.select("url", "text").mapInPandas(batches, schema=SENT_MENTIONS_SCHEMA)

@@ -53,9 +53,12 @@ def main() -> None:
         "UDF is the adaptive small-input guard (plans/partitioning.py) — it "
         "exists only because this 1-rowgroup test file scans as one split; at "
         "production split counts the guard is a no-op and the plan has 1 Exchange",
-        "pipeline_triples": "fused twin: pair loop inside the same Python stage — "
-        "graded equal, ~1.7x slower (BENCH/BASELINE.md); same adaptive "
-        "small-input hash-keyed (REPARTITION_BY_NUM) exchange as the flagship",
+        "pipeline_triples": "pipeline.run's triple chain: the same narrow Arrow-UDF "
+        "stage emits the mentions table, ONE (url, sent_id) groupBy collects "
+        "per-sentence mention arrays, the flagship's JVM posexplode core "
+        "generates the pairs, then the partial-aggregated triple groupBy; "
+        "same adaptive small-input hash-keyed (REPARTITION_BY_NUM) exchange "
+        "as the flagship",
         "mentions_decode": "relational W2 decode: scan -> window -> groupBy; one shuffle "
         "for the window, AQE-coalesced",
         "triples_agg": "J9 self-join form over the window decode (equi-join on doc_id)",

@@ -102,11 +102,12 @@ def test_batched_tagger_plumbing_matches_per_sentence(spark):
     assert batched == plain and len(batched) > 0
 
 
-def test_fused_pairs_accept_callable_tagger(spark):
+def test_sentence_mentions_accept_callable_tagger(spark):
     pages = spark.createDataFrame(synth.gen_pages(10, seed=3), schema=schemas.PAGES)
-    a = tagging.extract_pairs_fused(pages, tagger=FakeBatchTagger())
-    b = tagging.extract_pairs_fused(pages)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    a = tagging.extract_sentence_mentions(pages, tagger=FakeBatchTagger())
+    b = tagging.extract_sentence_mentions(pages)
+    got = sorted(map(tuple, a.collect()))
+    assert got == sorted(map(tuple, b.collect())) and len(got) > 0
 
 
 def test_real_hf_tokenizer_roundtrip(spark):

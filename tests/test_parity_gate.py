@@ -1,7 +1,8 @@
 """The acceptance gate at FIXTURES 'correctness' scale: strict triple
 parity P/R >= 0.95 vs the pure-Python oracle on a few thousand pages,
-through the PRODUCTION path (fused pages->pairs), plus the byte-identical
-text invariant (BASELINE.json:6,14,15)."""
+through the PRODUCTION path (the pipeline's mentions table -> grouped
+pairs -> score_pairs), plus the byte-identical text invariant
+(BASELINE.json:6,14,15)."""
 
 import hashlib
 from collections import defaultdict
@@ -9,6 +10,7 @@ from collections import defaultdict
 from pyspark.sql import functions as F
 
 from kgce import oracle, schemas, synth, tagging
+from kgce.operators import triples as triples_ops
 
 N_PAGES = 2000
 
@@ -18,7 +20,10 @@ def test_triple_parity_gate_correctness_scale(spark):
     df = spark.createDataFrame(pages, schema=schemas.PAGES).repartition(16)
 
     got = defaultdict(int)
-    for r in tagging.extract_pairs_fused(df).collect():
+    scored = triples_ops.score_pairs(
+        triples_ops.candidate_pairs_grouped(tagging.extract_mentions(df))
+    )
+    for r in scored.collect():
         got[(r.url, r.sent_id, r.subj_text, r.pred, r.obj_text)] += 1
 
     want = defaultdict(int)

@@ -34,7 +34,9 @@ def test_triples_parity_and_gate(spark):
 def test_aggregate_triples(spark):
     pages = synth.gen_pages(40, seed=3)
     df = spark.createDataFrame(pages, schema=schemas.PAGES)
-    trips = triples_ops.extract_triples(tagging.extract_mentions(df))
+    trips = triples_ops.aggregate_triples(
+        triples_ops.score_pairs(triples_ops.candidate_pairs_grouped(tagging.extract_mentions(df)))
+    )
     rows = trips.collect()
     assert all(r.n_evidence >= 1 and 0 < r.confidence <= 1.0 for r in rows)
     # aggregation key is unique
@@ -49,22 +51,28 @@ def test_grouped_pairs_equal_join_pairs(spark):
     pages = synth.gen_pages(40, seed=9)
     df = spark.createDataFrame(pages, schema=schemas.PAGES)
     mentions = tagging.extract_mentions(df).cache()
-    cols = ["url", "sent_id", "subj_mid", "subj_text", "subj_type", "subj_start",
-            "subj_end", "obj_mid", "obj_text", "obj_type", "obj_start", "obj_end"]
+    cols = ["url", "sent_id", "subj_text", "subj_type", "subj_start",
+            "subj_end", "obj_text", "obj_type", "obj_start", "obj_end"]
     joined = triples_ops.candidate_pairs(mentions).select(cols)
     grouped = triples_ops.candidate_pairs_grouped(mentions).select(cols)
     assert sorted(map(tuple, joined.collect())) == sorted(map(tuple, grouped.collect()))
 
 
-def test_fused_pairs_equal_relational(spark):
+def test_hybrid_pairs_equal_relational(spark):
+    """Per-sentence mention arrays straight from the tagging UDF give the
+    same scored pairs as the pipeline's mentions table grouped per
+    sentence — both through the one pair core."""
     pages = synth.gen_pages(40, seed=13)
     df = spark.createDataFrame(pages, schema=schemas.PAGES)
     cols = ["url", "sent_id", "subj_text", "subj_type", "pred", "obj_text", "obj_type", "confidence"]
-    fused = tagging.extract_pairs_fused(df).select(cols)
+    hybrid = triples_ops.score_pairs(
+        triples_ops.pairs_from_sentence_mentions(tagging.extract_sentence_mentions(df))
+    ).select(cols)
     rel = triples_ops.score_pairs(
         triples_ops.candidate_pairs_grouped(tagging.extract_mentions(df))
     ).select(cols)
-    assert sorted(map(tuple, fused.collect())) == sorted(map(tuple, rel.collect()))
+    got = sorted(map(tuple, hybrid.collect()))
+    assert got == sorted(map(tuple, rel.collect())) and len(got) > 0
 
 
 def test_evidence_urls_topk_provenance(spark):
