@@ -28,20 +28,7 @@ from kgce.operators import linking as linking_ops
 from kgce.operators import triples as triples_ops
 from kgce.operators.ruletag import mentions_sql
 from kgce.plans.stage import checkpoint
-
-
-_SHIPPED: set[int] = set()
-
-
-def _ensure_pkg(spark: SparkSession) -> None:
-    """Ship the kgce package zip to the caller's session so executors can
-    unpickle our UDF closures regardless of the driver's launch cwd."""
-    key = id(spark.sparkContext)
-    if key not in _SHIPPED:
-        from kgce.session import _ship_package
-
-        _ship_package(spark)
-        _SHIPPED.add(key)
+from kgce.session import _ship_package
 
 
 # tables whose graded queries are compute-heavy narrow pipelines over
@@ -54,7 +41,8 @@ _PARALLELIZE_TABLES = {"documents": "doc_id", "embeddings": "vec_id"}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    _ensure_pkg(spark)
+    # executors unpickle our UDF closures whatever the driver's launch cwd
+    _ship_package(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name in _PARALLELIZE_TABLES:
         from kgce.plans.partitioning import ensure_min_partitions

@@ -347,4 +347,8 @@ def pagerank(
                 * (F.coalesce(F.col("_in"), F.lit(0.0)) + F.col("_dm"))
             ).alias("rank"),
         )
+    # the O(nodes) result is materialized, so the persisted inputs can go
+    ranks = checkpoint(ranks)
+    norm_edges.unpersist()
+    nodes.unpersist()
     return ranks

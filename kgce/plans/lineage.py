@@ -3,7 +3,8 @@
 Every stage run is split into ``n_buckets`` deterministic buckets
 (``pmod(xxhash64(key), n_buckets)``).  Each bucket's output is written to
 ``<work_dir>/<stage>/data/bucket=<b>/`` and acknowledged by a manifest row
-``(stage, bucket, input_hash, row_count, wall_ms, status)`` appended to
+``(stage, bucket, input_hash, row_count, wall_ms, status)``
+(:data:`kgce.schemas.STAGE_MANIFEST`) appended to
 ``<work_dir>/<stage>/_manifest/``.  A re-run anti-joins the plan against
 the manifest: completed buckets are skipped, so a job killed mid-stage
 resumes where it stopped and produces byte-identical output.
@@ -23,8 +24,10 @@ import time
 from collections.abc import Callable
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from .. import schemas
 
 
 class StageConfigMismatch(RuntimeError):
@@ -95,8 +98,15 @@ class StageRunner:
         _, _, mdir = self._paths(stage)
         if not mdir.exists() or not any(mdir.iterdir()):
             return set()
-        m = self.spark.read.parquet(str(mdir))
-        return {r.bucket for r in m.filter(F.col("status") == "done").select("bucket").collect()}
+        m = self.manifest(stage).filter(F.col("status") == "done").select("bucket")
+        return {r.bucket for r in m.collect()}
+
+    def _record(self, mdir: Path, rows: list[tuple]) -> None:
+        """Append manifest rows: the acknowledgement that a bucket (or a
+        global stage, bucket -1) is done."""
+        self.spark.createDataFrame(rows, schemas.STAGE_MANIFEST).write.mode("append").parquet(
+            str(mdir)
+        )
 
     def run(
         self,
@@ -114,13 +124,16 @@ class StageRunner:
         Spark job — the wave's output is written with
         ``partitionBy('bucket')`` under dynamic partition overwrite, so
         the raw input is scanned once per wave instead of once per bucket
-        (the round-1 plan was ~3 scans x n_buckets).  Two cheap auxiliary
-        passes per wave remain: a key-column-pruned groupBy for the
-        per-bucket input hash, and a parquet-footer count of the written
-        output.  Failure granularity = wave: a killed run resumes at its
-        last completed wave's manifest.  Pass ``max_buckets_per_job=1``
-        to recover per-bucket granularity when transform cost dominates
-        scan cost.
+        (the round-1 plan was ~3 scans x n_buckets), and the write counts
+        its own rows per bucket (an :class:`Observation`), so written
+        buckets are never read back.  One auxiliary pass per wave
+        remains, a key-column-pruned groupBy for the per-bucket input
+        hash.  It stays a collect: an Observation on the input side runs
+        in a shuffle-map stage, where a re-run task's update can apply
+        twice, and a twice-applied ``bit_xor`` cancels itself.  Failure
+        granularity = wave: a killed run resumes at its last completed
+        wave's manifest.  Pass ``max_buckets_per_job=1`` to recover
+        per-bucket granularity when transform cost dominates scan cost.
 
         Requires ``key`` to survive ``transform`` (true for every kgce
         stage — mentions/pairs keep ``url``): the written buckets are
@@ -136,10 +149,6 @@ class StageRunner:
         bucket_col = F.pmod(F.xxhash64(F.col(key)), F.lit(self.n_buckets)).cast("int")
         bucketed = input_df.withColumn("_bucket", bucket_col)
 
-        manifest_schema = (
-            "stage string, bucket int, input_hash string, row_count long, "
-            "wall_ms long, status string"
-        )
         for w in range(0, len(missing), wave_size):
             wave = missing[w : w + wave_size]
             t0 = time.monotonic()
@@ -149,14 +158,17 @@ class StageRunner:
                 raise ValueError(
                     f"stage {stage!r}: transform dropped the bucket key {key!r}"
                 )
-            # one job writes every wave bucket
+            # one job writes every wave bucket and counts its rows per bucket
+            obs = Observation()
             (
                 out.withColumn("bucket", bucket_col)
+                .observe(obs, *[F.count_if(F.col("bucket") == b).alias(str(b)) for b in wave])
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket")
                 .parquet(str(ddir))
             )
+            counts = obs.get
             # per-bucket input hash: ONE key-column-pruned scan per wave
             hashes = {
                 r._bucket: r.h
@@ -164,34 +176,12 @@ class StageRunner:
                 .agg(F.coalesce(F.bit_xor(F.xxhash64(F.col(key))), F.lit(0)).alias("h"))
                 .collect()
             }
-            # per-bucket output rows: parquet footers only (metadata count)
-            counts: dict[int, int] = {}
-            existing = [b for b in wave if (ddir / f"bucket={b}").exists()]
-            if existing:
-                paths = [str(ddir / f"bucket={b}") for b in existing]
-                counts = {
-                    r.bucket: r.n
-                    for r in self.spark.read.option("basePath", str(ddir))
-                    .parquet(*paths)
-                    .groupBy("bucket")
-                    .agg(F.count("*").alias("n"))
-                    .collect()
-                }
             wall_ms = int((time.monotonic() - t0) * 1000)  # wave wall, per bucket
-            rows = [
-                (
-                    stage,
-                    b,
-                    format(hashes.get(b, 0) & (2**64 - 1), "016x"),
-                    counts.get(b, 0),
-                    wall_ms,
-                    "done",
-                )
+            self._record(mdir, [
+                (stage, b, format(hashes.get(b, 0) & (2**64 - 1), "016x"), counts[str(b)],
+                 wall_ms, "done")
                 for b in wave
-            ]
-            self.spark.createDataFrame(rows, manifest_schema).write.mode("append").parquet(
-                str(mdir)
-            )
+            ])
         return self.spark.read.parquet(str(ddir))
 
     def run_global(
@@ -213,20 +203,15 @@ class StageRunner:
         if (ddir / "_SUCCESS").exists():
             return self.spark.read.parquet(str(ddir))
         t0 = time.monotonic()
-        build().write.mode("overwrite").parquet(str(ddir))
-        out = self.spark.read.parquet(str(ddir))
-        n = out.count()
+        obs = Observation()
+        build().observe(obs, F.count("*").alias("n")).write.mode("overwrite").parquet(str(ddir))
         wall_ms = int((time.monotonic() - t0) * 1000)
-        self.spark.createDataFrame(
-            [(stage, -1, "", n, wall_ms, "done")],
-            "stage string, bucket int, input_hash string, row_count long, "
-            "wall_ms long, status string",
-        ).write.mode("append").parquet(str(mdir))
-        return out
+        self._record(mdir, [(stage, -1, "", obs.get["n"], wall_ms, "done")])
+        return self.spark.read.parquet(str(ddir))
 
     def manifest(self, stage: str) -> DataFrame:
         _, _, mdir = self._paths(stage)
-        return self.spark.read.parquet(str(mdir))
+        return self.spark.read.schema(schemas.STAGE_MANIFEST).parquet(str(mdir))
 
 
 def keep_latest_n(manifest_df: DataFrame, n: int, order_col: str = "wall_ms") -> DataFrame:

@@ -67,13 +67,14 @@ FEATURES = T.StructType(
     ]
 )
 
+# all nullable: the parquet layout manifests have always had (resumes append)
 STAGE_MANIFEST = T.StructType(
     [
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("input_hash", T.StringType(), False),
-        T.StructField("row_count", T.LongType(), False),
-        T.StructField("wall_ms", T.LongType(), False),
-        T.StructField("status", T.StringType(), False),
+        T.StructField("stage", T.StringType(), True),
+        T.StructField("bucket", T.IntegerType(), True),
+        T.StructField("input_hash", T.StringType(), True),
+        T.StructField("row_count", T.LongType(), True),
+        T.StructField("wall_ms", T.LongType(), True),
+        T.StructField("status", T.StringType(), True),
     ]
 )

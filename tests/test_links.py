@@ -344,3 +344,19 @@ def test_pagerank_matches_power_iteration(spark):
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
     # skewed synthetic crawl -> a genuinely non-uniform fixed point
     assert max(got.values()) > 2.0 * min(got.values())
+
+
+def test_pagerank_distributed_path_releases_its_cache(spark):
+    """The distributed loop (forced by small_graph_threshold=0) gives the
+    power iteration's ranks and leaves no cached frame behind."""
+    rows = synth.gen_linked_pages(60, seed=19)
+    hg = links.host_graph(links.extract_links(spark.createDataFrame(rows, schema=schemas.PAGES)))
+    want = _py_pagerank([(r.src_host, r.dst_host) for r in hg.collect()], iters=4)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.cachedData().size()
+    ranks = links.pagerank(hg, iters=4, small_graph_threshold=0)
+    assert cache.cachedData().size() == before
+    got = {r.node: r.rank for r in ranks.collect()}
+    assert set(got) == set(want)
+    for v in want:
+        assert got[v] == pytest.approx(want[v], rel=1e-9, abs=1e-12)
