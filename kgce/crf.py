@@ -68,17 +68,6 @@ def viterbi_decode(emissions: np.ndarray, params: CRFParams) -> list[int]:
     return out
 
 
-def viterbi_decode_batch(
-    emissions: np.ndarray, lengths: list[int], params: CRFParams
-) -> list[list[int]]:
-    """Decode a padded batch (batch, max_len, num_tags); ``lengths`` gives
-    the unpadded length per row (the reference masks pad positions)."""
-    return [
-        viterbi_decode(emissions[b, : lengths[b]], params)
-        for b in range(len(lengths))
-    ]
-
-
 def sequence_score(emissions: np.ndarray, tags: list[int], params: CRFParams) -> float:
     """Unnormalized path score (reference _compute_score :480-510)."""
     e = np.asarray(emissions, dtype=np.float64)

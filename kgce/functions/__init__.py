@@ -12,10 +12,6 @@ def label_type(label: Column) -> Column:
     return F.substring_index(label, "-", -1)
 
 
-def is_entity_label(label: Column) -> Column:
-    return label != F.lit("O")
-
-
 # Java-regex character class matching oracle.EDGE_PUNCT — ASCII only, so
 # Python str.strip, Java regex and RE2 (DuckDB) agree char for char.
 EDGE_PUNCT_CLASS = "[.,;:!?\"'()\\[\\]{}<>]"

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.stage import checkpoint
 from .dedup import word_shingles
 
 
@@ -78,7 +79,12 @@ def decontaminate(
     """Training corpus with ``n_hits`` and a ``contaminated`` flag
     (n_hits >= min_hits); callers filter on it.  ``min_hits`` > 1
     tolerates incidental single-n-gram collisions (common phrases) while
-    still catching verbatim leakage."""
+    still catching verbatim leakage.
+
+    ``train`` is read twice (the shingle hit count and the flag rejoin),
+    so it is checkpointed first; a leaf input (a parquet read or a
+    completed checkpoint) comes back unchanged."""
+    train = checkpoint(train)
     hits = ngram_hits(train, eval_docs, n, id_col, text_col)
     return (
         train.join(hits, train[id_col] == hits.doc_id, "left")

@@ -52,6 +52,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.stage import checkpoint
 from .dedup import normalize_doc
 
 UNK = "<unk>"
@@ -114,8 +115,6 @@ def train_bigram_lm(
     persist for reuse across scoring runs — callers scoring multiple
     corpora against one model should ``.persist()`` them.
     """
-    from ..plans.stage import checkpoint
-
     stream = _token_stream(docs, id_col, text_col)
     words = stream.select(F.explode("_toks").alias("word"))
     # the vocab is embedded in EVERY downstream consumer (the two unk
@@ -235,6 +234,11 @@ def perplexity_filter(
     page is not evidence of quality (CCNet stance); callers that want
     them keep the `perplexity` output and decide.  Returns the original
     columns plus ``ppl``.
+
+    ``docs`` is read twice (the scoring explode and the rejoin side), so
+    it is checkpointed first; a leaf input (a parquet read or a
+    completed checkpoint) comes back unchanged.
     """
+    docs = checkpoint(docs)
     scores = perplexity(docs, lm, id_col, text_col).select(id_col, "ppl")
     return docs.join(scores, id_col, "inner").filter(F.col("ppl") <= F.lit(max_ppl))

@@ -80,6 +80,14 @@ def _with_canonical_ids(
     )
 
 
+def _row_key():
+    """The row key of every hygiene stage: (url, md5(text)), url first.
+    Unique per surviving row even when a url was crawled twice with
+    different content, and ordered by url, so a stage whose keeper is
+    min(id) keeps the lowest-url row like the content-digest dedup."""
+    return F.concat_ws("\x00", F.col("url"), F.md5(F.col("text")))
+
+
 def clean_pages(
     pages: DataFrame,
     canonical_urls: bool = False,
@@ -142,6 +150,11 @@ def clean_pages(
     GLOBAL stage — in run_checkpointed it lands under one
     all-or-nothing manifest, never per-bucket (a per-bucket run would
     count document frequency inside one bucket only).
+
+    Every stage keys rows by :func:`_row_key`.  This function checkpoints
+    only the forks it makes itself (each strip-and-rejoin, the mixture
+    measure and filter); decontamination and the LM gate read their
+    input twice and checkpoint it themselves.
     """
     from pyspark.sql import Window
 
@@ -175,27 +188,15 @@ def clean_pages(
         # parallelism (and is a no-op at production split counts)
         out = ensure_min_partitions(out, key="url")
         out = textstats.repetition_filter(out, id_col="url", text_col="text")
-    if (
-        boilerplate_min_df is not None
-        or repeats_min_df is not None
-        or eval_docs is not None
-    ):
-        # the stages below consume `out` from several subtrees (strip
-        # base + rejoin side, decontam shingle explode + rejoin); an
-        # unmaterialized fork would re-run the dedup window and the
-        # repetition filter once per consumer (CLAUDE.md multi-consumer
-        # trap) — materialize once.  In run_checkpointed the whole
-        # stage output lands as parquet anyway; this protects direct
-        # clean_pages()/run() callers.
-        out = checkpoint(out)
     if boilerplate_min_df is not None:
-        # key the strip by a (url, text) row key, NOT url: a url crawled
-        # twice with different content yields two surviving rows after
-        # the content-digest dedup, and a url-keyed rejoin would
-        # cross-pair them k x k.  The strip input is deduped per key so
-        # the rejoin is exactly 1:1 per surviving row.
-        rk = F.md5(F.concat_ws("\x00", F.col("url"), F.col("text")))
-        out = out.withColumn("_rk", rk)
+        # the strip base and the rejoin side both read `out`: materialize
+        # the fork so the stages above run once.  The strip is keyed by
+        # the row key, NOT url: a url crawled twice with different
+        # content yields two surviving rows after the content-digest
+        # dedup, and a url-keyed rejoin would cross-pair them k x k.  The
+        # strip input is deduped per key so the rejoin is exactly 1:1 per
+        # surviving row.
+        out = checkpoint(out).withColumn("_rk", _row_key())
         stripped = bp_ops.strip_boilerplate(
             out.select("_rk", "text").dropDuplicates(["_rk"]),
             min_df=boilerplate_min_df,
@@ -203,14 +204,12 @@ def clean_pages(
         ).withColumnRenamed("doc_id", "_rk")
         out = out.drop("text").join(stripped, "_rk").drop("_rk")
     if repeats_min_df is not None:
-        # row key ORDERED BY URL (url first, digest as tiebreaker): the
-        # repeats keeper is min(id), so the lowest-url row keeps the one
-        # surviving copy of every repeated span — the same keeper rule
-        # as the content-digest dedup
+        # the same fork as the boilerplate strip; the repeats keeper is
+        # min(id), and the url-first row key makes it the lowest-url row —
+        # the same keeper rule as the content-digest dedup
         from .operators import repeats as rp
 
-        rk2 = F.concat_ws("\x00", F.col("url"), F.md5(F.col("text")))
-        out = out.withColumn("_rk", rk2)
+        out = checkpoint(out).withColumn("_rk", _row_key())
         stripped2 = rp.strip_repeated_ngrams(
             out.select("_rk", "text").dropDuplicates(["_rk"]),
             n=repeats_n,
@@ -219,23 +218,13 @@ def clean_pages(
         ).withColumnRenamed("doc_id", "_rk")
         out = out.drop("text").join(stripped2, "_rk").drop("_rk")
     if eval_docs is not None:
-        # decontaminate consumes `out` from TWO subtrees (the
-        # shingle-explode hit count + the flag rejoin); after a
-        # boilerplate/repeats strip-and-rejoin this materializes it once
-        # (the CLAUDE.md multi-consumer trap, measured ~2x the strip cost
-        # at sf1); without one, `out` is still the checkpoint above and
-        # comes back unchanged
-        out = checkpoint(out)
-        # key by the same md5(url, text) ROW key as the boilerplate strip
-        # (ADVICE r3): a url crawled twice with different content keeps
-        # two rows after the content-digest dedup, and a url-keyed pass
-        # would pool (and double-count) n-grams across those rows AND
-        # drop every row of a url when only one overlaps the eval set.
-        out = out.withColumn(
-            "_rk", F.md5(F.concat_ws("\x00", F.col("url"), F.col("text")))
-        )
+        # row-keyed, not url-keyed: a url crawled twice with different
+        # content keeps two rows after the content-digest dedup, and a
+        # url-keyed pass would pool (and double-count) n-grams across
+        # those rows AND drop every row of a url when only one overlaps
+        # the eval set
         flagged = dc.decontaminate(
-            out,
+            out.withColumn("_rk", _row_key()),
             eval_docs,
             n=decontam_n,
             min_hits=decontam_min_hits,
@@ -247,19 +236,16 @@ def clean_pages(
     if lm_model is not None:
         if max_ppl is None:
             raise ValueError("clean_pages: lm_model requires max_ppl")
-        # perplexity_filter consumes its input from two subtrees (the
-        # scoring explode and the rejoin side) — materialize first so
-        # the hygiene prefix doesn't re-execute per consumer (the same
-        # multi-consumer discipline as the boilerplate/decontam gate).
-        # Row-keyed by md5(url, text) like every stage above: two
-        # different-content crawls of one url score independently.
+        # row-keyed like every stage above: two different-content crawls
+        # of one url score independently
         from .operators.lmfilter import perplexity_filter
 
-        out = checkpoint(out).withColumn(
-            "_rk", F.md5(F.concat_ws("\x00", F.col("url"), F.col("text")))
-        )
         out = perplexity_filter(
-            out, lm_model, max_ppl, id_col="_rk", text_col="text"
+            out.withColumn("_rk", _row_key()),
+            lm_model,
+            max_ppl,
+            id_col="_rk",
+            text_col="text",
         ).drop("_rk", "ppl")
     if domain_cap is not None:
         from .operators.domains import cap_domains
@@ -278,16 +264,9 @@ def clean_pages(
         # measure AFTER every dropping stage so the realized mixture is
         # computed over what can actually be kept; the weight frame is
         # per-stratum (languages/sources) — an O(strata) collect, the
-        # same size class as the IVF codebook
-        if (
-            boilerplate_min_df is not None
-            or repeats_min_df is not None
-            or eval_docs is not None
-        ):
-            # `out` is about to be consumed by the token-count measure
-            # AND the final filter — materialize the fork (the earlier
-            # checkpoint covers only the pre-boilerplate prefix)
-            out = checkpoint(out)
+        # same size class as the IVF codebook.  The measure and the
+        # filter both read `out`: materialize the fork.
+        out = checkpoint(out)
         w = mixing_weights(out, target_mix, strata_col=mix_strata_col)
         fracs = {r.stratum: float(r.keep_frac) for r in w.collect()}
         out = stratified_hash_sample(
@@ -482,7 +461,6 @@ def run_checkpointed(
     n_buckets: int = 8,
     link_threshold: float = 0.6,
     salt_hot_domains: bool = True,
-    n_salt: int = 16,
     clean: dict | None = None,
     provenance_k: int | None = None,
     structured: bool = False,
@@ -499,7 +477,7 @@ def run_checkpointed(
     checkpoints per epoch internally.
 
     ``salt_hot_domains`` pre-spreads Zipf-skewed crawls: pages are
-    repartitioned by (domain, xxhash64(url) % n_salt) before the UDF
+    repartitioned by (domain, xxhash64(url) % 16) before the UDF
     stages so no task owns a whole hot domain (BASELINE.json:6,14).  The
     salt is a pure function of the url — deterministic across re-runs,
     so bucket manifests stay valid.
@@ -507,7 +485,7 @@ def run_checkpointed(
     from .plans.skew import domain_of, salted_repartition
 
     if salt_hot_domains:
-        pages = salted_repartition(pages, domain_of(F.col("url")), n_salt=n_salt)
+        pages = salted_repartition(pages, domain_of(F.col("url")))
     runner = StageRunner(pages.sparkSession, work_dir, n_buckets=n_buckets)
     out = _compose(
         runner, pages, link_threshold, clean, provenance_k, structured, embed, aliases, infer

@@ -288,20 +288,16 @@ def stream_triples_merge(
         if batch_df.isEmpty():
             return
         if lm_model is not None:
-            # same row key + materialize-before-fork discipline as the
-            # batch gate (pipeline.clean_pages stage 4a): the filter
-            # consumes its input from two subtrees, and a foreachBatch
-            # frame re-reads the micro-batch source per consumer.
-            from pyspark.sql import functions as F
-
+            # the batch gate's row key (pipeline.clean_pages stage 4a)
             from .operators.lmfilter import perplexity_filter
-            from .plans.stage import checkpoint
+            from .pipeline import _row_key
 
-            keyed = checkpoint(batch_df).withColumn(
-                "_rk", F.md5(F.concat_ws("\x00", F.col("url"), F.col("text")))
-            )
             batch_df = perplexity_filter(
-                keyed, lm_model, max_ppl, id_col="_rk", text_col="text"
+                batch_df.withColumn("_rk", _row_key()),
+                lm_model,
+                max_ppl,
+                id_col="_rk",
+                text_col="text",
             ).drop("_rk", "ppl")
             if batch_df.isEmpty():
                 return

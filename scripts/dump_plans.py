@@ -126,8 +126,8 @@ def main() -> None:
         "assignment is a pure plan-literal projection (no codebook join), "
         "TakeOrderedAndProject caps the output",
         "pipeline_full": "COMPOSED end-to-end job (clean -> extract -> link "
-        "-> triples): hygiene stages materialize once behind a "
-        "localCheckpoint, the canonical-map joins are UNHINTED (AQE "
+        "-> triples): each hygiene fork (the boilerplate strip, "
+        "decontamination) reads a localCheckpoint, the canonical-map joins are UNHINTED (AQE "
         "broadcast-or-shuffle at runtime), and the repetition filter runs "
         "behind the keyed min-partitions guard — the cross-stage recompute "
         "tripwire the per-stage benches cannot provide",

@@ -301,3 +301,96 @@ def test_provenance_agg_two_exchanges_no_fork(spark):
     assert plan.count("MapInPandas") == 1
     assert plan.count("Exchange") == 2
     assert "SortAggregate" not in plan
+
+
+def _scans(plan: str) -> tuple[int, int]:
+    """(cache scans, checkpoint scans) in an executed plan."""
+    return plan.count("InMemoryTableScan"), plan.count("ExistingRDD")
+
+
+def test_clean_pages_materializes_each_strip_input(spark):
+    """boilerplate + repeats: each strip-and-rejoin forks its own input,
+    so clean_pages checkpoints before each one.  The final plan then
+    reads the repeats strip's fork as a checkpoint and scans no more
+    caches or checkpoints than the boilerplate strip alone; without it
+    the repeats strip re-ran the boilerplate strip once per consumer
+    (24 cache and 50 checkpoint scans against 4 and 10)."""
+    from kgce import pipeline
+    from kgce.operators import boilerplate, repeats
+
+    pages = spark.createDataFrame(synth.gen_pages(200, seed=5), schema=schemas.PAGES)
+
+    def rows(df):
+        return sorted(tuple(r[c] for c in pages.columns) for r in df.collect())
+
+    try:
+        bp = pipeline.clean_pages(pages, boilerplate_min_df=3)
+        bp_rows = rows(bp)
+        both = pipeline.clean_pages(pages, boilerplate_min_df=3, repeats_min_df=2)
+        both_rows = rows(both)
+        assert _scans(_plan(both)) <= _scans(_plan(bp))
+        # the composition equals the two stages run one after the other
+        bp_then_rep = pipeline.clean_pages(
+            spark.createDataFrame(bp_rows, schema=pages.schema),
+            exact_dedup=False,
+            repetition=False,
+            repeats_min_df=2,
+        )
+        assert both_rows == rows(bp_then_rep)
+    finally:
+        boilerplate.release_cache()
+        repeats.release_cache()
+
+
+def test_clean_pages_mixture_reads_a_checkpoint(spark):
+    """target_mix alone: the mixture measure and the final filter both
+    read the cleaned corpus, so clean_pages checkpoints it first; the
+    final plan keeps neither the dedup window nor the repetition
+    filter's Arrow UDF (each ran twice before)."""
+    from kgce import pipeline
+
+    pages = spark.createDataFrame(synth.gen_pages(200, seed=5), schema=schemas.PAGES)
+    out = pipeline.clean_pages(pages, target_mix={"en": 0.5, "de": 0.3, "fr": 0.2})
+    assert out.count() > 0
+    plan = _plan(out)
+    assert "Window [" not in plan and "MapInPandas" not in plan
+
+
+def test_label_propagation_round_reuses_edge_partitioning(spark, monkeypatch):
+    """Each LPA round groups the persisted symmetric edge table by node;
+    it is persisted hash-partitioned by node, so no shuffle Exchange
+    sits over its scan (the small per-node result may broadcast).  A
+    checkpoint in place of the persist loses the partitioning under AQE
+    (the round plans fresh Exchanges over the edges), so this is where
+    `.persist()` must stay."""
+    from kgce.operators import graph
+
+    edges = spark.createDataFrame(
+        [(i, (i * 7 + 3) % 40, i % 3 + 1) for i in range(40)], "a long, b long, w long"
+    )
+    for weight in (None, "w"):
+        frames = []
+
+        def record(df, _real=graph.checkpoint):
+            frames.append(df)
+            return _real(df)
+
+        monkeypatch.setattr(graph, "checkpoint", record)
+        graph.label_propagation(edges, iterations=1, weight=weight)
+        monkeypatch.undo()
+        # the last checkpointed frame is the round's label table; its
+        # final adaptive plan, operator by operator with tree depth
+        plan = _plan(frames[-1]).split("== Initial Plan ==")[0]
+        ops = [
+            (len(m.group(1)), m.group(2))
+            for m in re.finditer(r"^([ :|+-]*)(?:\*\(\d+\) )?(\S+)", plan, re.M)
+        ]
+        scans = [i for i, (_, name) in enumerate(ops) if name == "InMemoryTableScan"]
+        assert scans, weight
+        for i in scans:
+            # walk up the tree: the nearest shallower operator is the parent
+            depth = ops[i][0]
+            for d, name in reversed(ops[:i]):
+                if d < depth:
+                    assert name != "Exchange", (weight, plan)  # a shuffle
+                    depth = d

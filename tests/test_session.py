@@ -27,10 +27,18 @@ def test_get_spark_codegen_settings_and_extra_conf_override(spark):
 
 
 def test_repeated_pipeline_run_reuses_generated_classes(spark, tmp_path):
-    # the same job three times in one session: after the first run every
-    # generated class is a cache hit.  With Spark's defaults (a 100-entry
+    # the same job three times in one session: after the first run the
+    # pass's classes are cache hits.  With Spark's defaults (a 100-entry
     # cache, stage ids in class names) the pass's ~130 classes evict each
-    # other and every run recompiles most of them.
+    # other and every run recompiles most of them ([121, 96, 91]).
+    # The first run's count depends on what earlier tests left in the
+    # cache, so the bound is on the warm runs alone.  They still compile
+    # a few classes: AQE picks a plan alternate from runtime sizes (a
+    # broadcast join over LongHashedRelation or UnsafeHashedRelation, a
+    # fused or a sorted join side), and each new class compiles once per
+    # class loader (two in this session).  Measured warm-run counts: [6, 0]
+    # alone, [0, 0] after test_pipeline.py, [0, 6] and [4, 4] after
+    # test_resume.py and test_links.py.
     rows = synth.gen_pages(50, seed=23)
     counts = []
     for i in range(3):
@@ -39,4 +47,4 @@ def test_repeated_pipeline_run_reuses_generated_classes(spark, tmp_path):
         materialize.write_nodes(out["nodes"], str(tmp_path / str(i)))
         materialize.write_edges(out["edges"], str(tmp_path / str(i)))
         counts.append(_compiles(spark) - before)
-    assert counts[2] <= counts[0] // 10, counts
+    assert counts[1] + counts[2] <= 12, counts
