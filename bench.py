@@ -49,11 +49,11 @@ HEADLINE = [
 
 # training-data-pipeline operators, timed once each (single run, primary
 # sf only) — round-over-round perf evidence beyond the KG headline.
-# Deliberately EXCLUDED: ngram_jaccard and simhash_pairs — their graded
-# forms are exact all-pairs (max_df=None) and the synthetic corpus's
-# shared filler vocabulary makes that quadratic (158s/50s at sf0.01);
-# they exist to grade VALUES, the scale path is the max_df-guarded /
-# LSH-blocked form already benched via near_dup_groups.
+# Deliberately EXCLUDED: ngram_jaccard and simhash_pairs — they exist to
+# grade VALUES.  Their graded forms cap no bucket (max_df=None: every
+# shared shingle pairs), so a hot shingle or band costs k² pairs; the
+# MinHash-LSH scale path is benched via near_dup_groups.  Min-of-3
+# at sf0.01 on local[4]: ngram_jaccard 1.9 s, simhash_pairs 2.8 s.
 EXTENDED = [
     "pipeline_full_prov",
     "structured_triples",

@@ -17,6 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.stage import checkpoint
+from .linking import band_pairs
+
 
 def _dot(a, b) -> "F.Column":
     return F.aggregate(
@@ -222,6 +225,12 @@ def embedding_near_dup_pairs(
 ) -> DataFrame:
     """Near-duplicate vector pairs: SRP block -> in-bucket pairwise verify.
 
+    The (id, vector, bucket) frame is checkpointed, so the projections
+    run once; :func:`linking.band_pairs` self-joins its single ``bucket``
+    key and the vectors re-attach to the pairs for the cosine verify.
+    Precondition: ``id_col`` is unique per row (a repeated id re-attaches
+    1:k).
+
     ``dim`` defaults to the actual vector width (1-row probe).  Passing a
     dim SMALLER than the vectors would null out every projection via
     zip_with padding and collapse all vectors into bucket 0 — silently
@@ -229,21 +238,22 @@ def embedding_near_dup_pairs(
     """
     if dim is None:
         dim = len(embeddings.select(vec_col).first()[0])
-    bucketed = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        srp_bucket(F.col(vec_col), n_planes, dim, plane_hash=plane_hash).alias("bucket"),
+    bucketed = checkpoint(
+        embeddings.select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).alias("v"),
+            srp_bucket(F.col(vec_col), n_planes, dim, plane_hash=plane_hash).alias("bucket"),
+        )
     )
-    a = bucketed.select(F.col("id").alias("a"), F.col("v").alias("va"), "bucket")
-    b = bucketed.select(F.col("id").alias("b"), F.col("v").alias("vb"), "bucket")
+    pairs = band_pairs(bucketed, "id", ["bucket"], None)
+    for side in ("a", "b"):
+        pairs = pairs.join(
+            bucketed.select(F.col("id").alias(side), F.col("v").alias(f"v{side}")), side
+        )
     cos = _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb")))
     return (
-        a.join(b, "bucket")
-        .filter(F.col("a") < F.col("b"))
-        .withColumn("cosine", F.round(cos, 6))
+        pairs.select("a", "b", F.round(cos, 6).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
-        .select("a", "b", "cosine")
-        .distinct()
     )
 
 

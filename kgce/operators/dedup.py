@@ -5,16 +5,21 @@ Four families, each a DataFrame->DataFrame operator over a
 
 * exact        — hash-groupBy on a content digest (md5 so the DuckDB
                  oracle can reproduce it bit-for-bit),
-* n-gram Jaccard — exploded word-shingle equi-join; pairs above a
-                 Jaccard threshold.  One shuffle on shingle, one on pair.
+* n-gram Jaccard — checkpointed per-doc shingle sets; their exploded
+                 (doc_id, shingle) rows are the band table of
+                 ``linking.band_pairs`` (one shuffle on shingle), the
+                 distinct pairs are verified with exact set Jaccard.
 * MinHash+LSH  — shingle -> K minhashes -> B band buckets -> bucket join;
                  the scale path: candidate generation never compares all
-                 pairs.  Hash = md5(seed || shingle) (lexicographic min),
-                 chosen over xxhash64 ONLY because both engines implement
-                 md5 identically — swap to xxhash64 on a real cluster.
+                 pairs.  md5 family (one md5 per shingle + universal
+                 hashing, DuckDB-reproducible) or xxhash64 (production).
 * SimHash      — 64-bit weighted-majority fingerprint; near-dups differ
-                 in few bits.  Bitwise ops are JVM-side; no SQL oracle
-                 (verified against a pure-Python oracle in pytest).
+                 in few bits, found by 4x16-bit band blocking.  Bitwise
+                 ops are JVM-side; the xxhash64 form is verified against
+                 a pure-Python oracle in pytest, the md5 twin by DuckDB.
+
+Every pair-generating blocker self-joins its band rows through
+``linking.band_pairs`` over a checkpointed signature or band frame.
 
 Embedding-cosine near-dup lives in kgce.operators.ann (same machinery as
 similarity search).
@@ -96,47 +101,41 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """All-pairs n-gram Jaccard >= threshold via shingle inverted index.
 
-    Distributed shape: explode shingles (narrow), self-join on shingle
-    (one shuffle), count common shingles per pair, then
-    |A∩B| / (|A|+|B|-|A∩B|).
+    Distributed shape: the per-doc shingle sets are checkpointed once;
+    their exploded (doc_id, shingle) rows are the band table of
+    :func:`linking.band_pairs` (one shuffle on shingle), the distinct
+    pairs that share a shingle are the candidates, and
+    :func:`linking.verified_edges` scores each with the exact Jaccard of
+    the two full sets.
 
     ``max_df`` is the 100-TB guard: a stop-shingle ("of the x") appearing
     in k docs contributes k² rows to the self-join — one hot shingle can
     pair a large fraction of the corpus.  With ``max_df`` set, shingles
     whose document frequency exceeds it are dropped from CANDIDATE
-    generation and the surviving pairs are re-verified with EXACT Jaccard
-    over the full shingle sets (so reported values stay exact; only pairs
-    whose every common shingle is high-DF can be missed — by construction
-    near-dups share many low-DF shingles).  Default None keeps the fully
-    exact single-join form.
+    generation only, so reported values stay exact; only pairs whose
+    every common shingle is high-DF can be missed — by construction
+    near-dups share many low-DF shingles.  Default None keeps every
+    shingle: every pair with a common shingle is verified.
+
+    Precondition: ``id_col`` is unique per row.  A repeated id makes the
+    set re-attach 1:k, so one pair can be reported with several values.
     """
-    sh = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(word_shingles(F.col(text_col), n)).alias("n_sh"),
-        F.explode(word_shingles(F.col(text_col), n)).alias("shingle"),
+    full = checkpoint(
+        docs.select(F.col(id_col).alias("doc_id"), word_shingles(F.col(text_col), n).alias("sh"))
     )
-    if max_df is not None:
-        cands = band_pairs(sh, "doc_id", ["shingle"], max_df).distinct()
-        full = docs.select(
-            F.col(id_col).alias("_id"), word_shingles(F.col(text_col), n).alias("_sh")
+    sh = full.select("doc_id", F.explode("sh").alias("shingle"))
+    cands = band_pairs(sh, "doc_id", ["shingle"], max_df).distinct()
+    return verified_edges(_reattach(cands, full, "sh"), threshold)
+
+
+def _reattach(pairs: DataFrame, per_doc: DataFrame, col: str) -> DataFrame:
+    """``pairs`` (a, b) with ``per_doc``'s (doc_id, ``col``) payload joined
+    on as ``<col>_a`` and ``<col>_b``."""
+    for side in ("a", "b"):
+        pairs = pairs.join(
+            per_doc.select(F.col("doc_id").alias(side), F.col(col).alias(f"{col}_{side}")), side
         )
-        return verified_edges(
-            cands.join(full.select(F.col("_id").alias("a"), F.col("_sh").alias("sh_a")), "a")
-            .join(full.select(F.col("_id").alias("b"), F.col("_sh").alias("sh_b")), "b"),
-            threshold,
-        )
-    a = sh.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("na"), "shingle")
-    b = sh.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("nb"), "shingle")
-    common = (
-        a.join(b, "shingle")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b", "na", "nb")
-        .agg(F.count("*").alias("common"))
-    )
-    jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
-    return common.withColumn("jaccard", jac).filter(F.col("jaccard") >= threshold).select(
-        "a", "b", "jaccard"
-    )
+    return pairs
 
 
 def minhash_band_buckets(
@@ -161,91 +160,67 @@ def minhash_band_buckets(
       * ``xx``  — minhash_i = min of xxhash64(shingle, seed=i) — the
         production path at 100 TB (no DuckDB twin; pytest-verified
         equivalent pair recall instead).
+
+    The two differ only in the per-shingle value, the family member
+    derived from it and the band's bucket expression; the fold and the
+    band explode are shared.
     """
-    # the shingle array and the per-shingle base hash are materialized as
-    # COLUMNS once per row; the K family members are then cheap array
-    # transforms over that bound column — NO explode, NO shuffle, the
-    # whole signature computation is a narrow projection (round-1 used an
-    # explode + 8-way groupBy, i.e. a full shuffle of every shingle row)
-    rows = num_hashes // bands
-    # Both paths fold ALL hash families in ONE F.aggregate pass with a
-    # struct accumulator: K separate array_min(transform(...)) columns
-    # each materialize an intermediate array per row — measured 3.7 s of
-    # the md5 path's 5 s at sf0.1.  The accumulator struct lands in its
-    # own projection so the fold is evaluated once, not once per field.
+    shingles = word_shingles(F.col(text_col), n)
     if hash_fn == "xx":
-        shingled = docs.select(
-            F.col(id_col).alias("doc_id"), word_shingles(F.col(text_col), n).alias("_sh")
+        return _band_buckets(
+            docs.select(F.col(id_col).alias("doc_id"), shingles.alias("_x")),
+            num_hashes,
+            bands,
+            F.lit(2**63 - 1),
+            lambda i, s: F.xxhash64(s, F.lit(i)),
+            lambda mhs: F.xxhash64(*mhs).cast("string"),
         )
-        zero = F.struct(
-            *[F.lit(2**63 - 1).alias(f"m{i}") for i in range(num_hashes)]
-        )
-        acc = F.aggregate(
-            F.col("_sh"),
-            zero,
-            lambda a, s: F.struct(
-                *[
-                    F.least(a[f"m{i}"], F.xxhash64(s, F.lit(i))).alias(f"m{i}")
-                    for i in range(num_hashes)
-                ]
-            ),
-        )
-        sig = shingled.select("doc_id", acc.alias("_acc")).select(
-            "doc_id", *[F.col("_acc").getField(f"m{i}").alias(f"mh{i}") for i in range(num_hashes)]
-        )
-        band_structs = F.array(
-            *[
-                F.struct(
-                    F.lit(band).alias("band_id"),
-                    F.xxhash64(
-                        *[F.col(f"mh{band * rows + j}") for j in range(rows)]
-                    ).cast("string").alias("bucket"),
-                )
-                for band in range(bands)
-            ]
-        )
-        return sig.select("doc_id", F.explode(band_structs).alias("b")).select(
-            "doc_id", F.col("b.band_id").alias("band_id"), F.col("b.bucket").alias("bucket")
-        )
-    based = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.transform(
-            word_shingles(F.col(text_col), n),
-            lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
-        ).alias("_b"),
+    return _band_buckets(
+        docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.transform(
+                shingles, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
+            ).alias("_x"),
+        ),
+        num_hashes,
+        bands,
+        F.lit(MH_P).cast("long"),
+        lambda i, b: (F.lit(MH_A[i]) * b + F.lit(MH_C[i])) % F.lit(MH_P),
+        lambda mhs: F.md5(F.concat_ws("|", *[m.cast("string") for m in mhs])),
     )
-    zero = F.struct(
-        *[F.lit(MH_P).cast("long").alias(f"m{i}") for i in range(num_hashes)]
-    )
+
+
+def _band_buckets(per_doc, num_hashes, bands, zero, member, bucket) -> DataFrame:
+    """(doc_id, band_id, bucket) rows from ``per_doc`` (doc_id, _x): the
+    K minhashes ``min over x in _x of member(i, x)`` (``zero`` when _x is
+    empty), then one ``bucket(minhashes)`` per band of K / bands rows.
+
+    The shingle array and its per-shingle values are COLUMNS, so the
+    whole signature is a narrow projection — NO explode before the fold,
+    NO shuffle (round-1 used an explode + 8-way groupBy, i.e. a full
+    shuffle of every shingle row).  All K families fold in ONE
+    ``F.aggregate`` pass with a struct accumulator: K separate
+    array_min(transform(...)) columns each materialize an intermediate
+    array per row — measured 3.7 s of the md5 path's 5 s at sf0.1.  The
+    accumulator struct lands in its own projection so the fold is
+    evaluated once, not once per field; all bands come from one array
+    explode, not a union of recomputed branches."""
+    rows = num_hashes // bands
     acc = F.aggregate(
-        F.col("_b"),
-        zero,
-        lambda a, b: F.struct(
-            *[
-                F.least(
-                    a[f"m{i}"], (F.lit(MH_A[i]) * b + F.lit(MH_C[i])) % F.lit(MH_P)
-                ).alias(f"m{i}")
-                for i in range(num_hashes)
-            ]
+        F.col("_x"),
+        F.struct(*[zero.alias(f"m{i}") for i in range(num_hashes)]),
+        lambda a, x: F.struct(
+            *[F.least(a[f"m{i}"], member(i, x)).alias(f"m{i}") for i in range(num_hashes)]
         ),
     )
-    sig = based.select("doc_id", acc.alias("_acc")).select(
+    sig = per_doc.select("doc_id", acc.alias("_acc")).select(
         "doc_id", *[F.col("_acc").getField(f"m{i}").alias(f"mh{i}") for i in range(num_hashes)]
     )
-    # all bands in one select + explode (no union of recomputed branches)
     band_structs = F.array(
         *[
             F.struct(
                 F.lit(band).alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.col(f"mh{band * rows + j}").cast("string")
-                            for j in range(rows)
-                        ],
-                    )
-                ).alias("bucket"),
+                bucket([F.col(f"mh{band * rows + j}") for j in range(rows)]).alias("bucket"),
             )
             for band in range(bands)
         ]
@@ -278,78 +253,56 @@ def minhash_lsh_pairs(
     return band_pairs(bb, "doc_id", ["band_id", "bucket"], max_bucket_size).distinct()
 
 
-def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """64-bit SimHash over words: bit j = majority sign of hash-bit j.
+def _simhash_fold(docs: DataFrame, id_col: str, text_col: str, bits: int, **hashes) -> DataFrame:
+    """(doc_id, <name>...) SimHash fingerprints of ``bits`` bits, one per
+    ``name=word_hash`` keyword: bit j is set when most words' hash has
+    bit j set (the majority sign of +1/-1 votes).
 
-    All bitwise math stays in JVM codegen: per word, xxhash64 supplies the
-    64 bits; per bit, +1/-1 votes are summed via an aggregate over a
-    64-slot array.
-    """
+    All bitwise math stays in JVM codegen: one aggregate pass over the
+    words sums a ``bits``-slot vote array (the bit index is unrolled at
+    plan time — shiftright needs a literal bit count), and the votes land
+    in their own projection, so the fold runs once per row, not once per
+    bit read.  Bit 63 is the signed long's sign bit."""
     words = F.split(normalize_doc(F.col(text_col)), " ")
-    hashes = F.transform(words, lambda w: F.xxhash64(w))
-    # vote vector per word, built with the bit index unrolled at plan time
-    # (shiftright needs a literal bit count); one aggregate pass over words
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, F.lit(1))
-                    .otherwise(F.lit(-1))
-                    .cast("long")
-                    for j in range(64)
-                ]
+
+    def votes(word_hash) -> "F.Column":
+        return F.aggregate(
+            F.transform(words, word_hash),
+            F.array_repeat(F.lit(0).cast("long"), bits),
+            lambda acc, h: F.zip_with(
+                acc,
+                F.array(
+                    *[
+                        F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, F.lit(1))
+                        .otherwise(F.lit(-1))
+                        .cast("long")
+                        for j in range(bits)
+                    ]
+                ),
+                lambda a, v: a + v,
             ),
-            lambda a, v: a + v,
-        ),
-    )
-    docs = docs.withColumn("_votes", votes)
-    fp = F.lit(0).cast("long")
-    for j in range(64):
-        bit = (1 << j) if j < 63 else -(1 << 63)  # sign bit as signed long
-        fp = fp.bitwiseOR(
-            F.when(F.element_at("_votes", j + 1) > 0, F.lit(bit).cast("long")).otherwise(
-                F.lit(0).cast("long")
+        )
+
+    def fingerprint(v: "F.Column") -> "F.Column":
+        fp = F.lit(0).cast("long")
+        for j in range(bits):
+            bit = (1 << j) if j < 63 else -(1 << 63)
+            fp = fp.bitwiseOR(
+                F.when(F.element_at(v, j + 1) > 0, F.lit(bit).cast("long")).otherwise(
+                    F.lit(0).cast("long")
+                )
             )
-        )
-    return docs.select(F.col(id_col).alias("doc_id"), fp.alias("simhash"))
+        return fp
+
+    voted = docs.select(
+        F.col(id_col).alias("doc_id"), *[votes(h).alias(f"_v_{k}") for k, h in hashes.items()]
+    )
+    return voted.select("doc_id", *[fingerprint(F.col(f"_v_{k}")).alias(k) for k in hashes])
 
 
-def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3, band_bits: int = 16) -> DataFrame:
-    """Near-dup pairs by SimHash: block on 16-bit bands (any equal band),
-    verify Hamming distance <= max_hamming.  Standard 4-band trick: dups
-    within 3 bits MUST agree on at least one of 4 disjoint 16-bit bands.
-    """
-    sh = simhash(docs)
-    bands = [
-        F.shiftrightunsigned(F.col("simhash"), i * band_bits)
-        .bitwiseAND(F.lit((1 << band_bits) - 1))
-        .alias(f"band{i}")
-        for i in range(64 // band_bits)
-    ]
-    banded = sh.select("doc_id", "simhash", *[b for b in bands])
-    stacked = None
-    for i in range(64 // band_bits):
-        part = banded.select(
-            "doc_id", "simhash", F.lit(i).alias("band_id"), F.col(f"band{i}").alias("band_val")
-        )
-        stacked = part if stacked is None else stacked.unionByName(part)
-    a = stacked.select(
-        F.col("doc_id").alias("a"), F.col("simhash").alias("sh_a"), "band_id", "band_val"
-    )
-    b = stacked.select(
-        F.col("doc_id").alias("b"), F.col("simhash").alias("sh_b"), "band_id", "band_val"
-    )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        a.join(b, ["band_id", "band_val"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", ham.alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
+def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """(doc_id, simhash): 64-bit SimHash over words, xxhash64 per word."""
+    return _simhash_fold(docs, id_col, text_col, 64, simhash=lambda w: F.xxhash64(w))
 
 
 def simhash_md5(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -361,75 +314,64 @@ def simhash_md5(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     Production path stays :func:`simhash` (xxhash64 — one hash per word
     instead of an md5 + two string slices).
     """
-    words = F.split(normalize_doc(F.col(text_col)), " ")
 
-    def _fp(offset: int) -> "F.Column":
-        hs = F.transform(
-            words,
-            lambda w: F.conv(F.substring(F.md5(w), offset, 8), 16, 10).cast("long"),
-        )
-        votes = F.aggregate(
-            hs,
-            F.array_repeat(F.lit(0).cast("long"), 32),
-            lambda acc, h: F.zip_with(
-                acc,
-                F.array(
-                    *[
-                        F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, F.lit(1))
-                        .otherwise(F.lit(-1))
-                        .cast("long")
-                        for j in range(32)
-                    ]
-                ),
-                lambda a, v: a + v,
-            ),
-        )
-        fp = F.lit(0).cast("long")
-        for j in range(32):
-            fp = fp + F.when(F.element_at(votes, j + 1) > 0, F.lit(1 << j)).otherwise(
-                F.lit(0)
-            ).cast("long")
-        return fp
+    def half(offset: int):
+        return lambda w: F.conv(F.substring(F.md5(w), offset, 8), 16, 10).cast("long")
 
-    return docs.select(
-        F.col(id_col).alias("doc_id"), _fp(1).alias("fp_hi"), _fp(9).alias("fp_lo")
+    return _simhash_fold(docs, id_col, text_col, 32, fp_hi=half(1), fp_lo=half(9))
+
+
+def _simhash_pairs(fp: DataFrame, bands: list, hamming, max_hamming: int) -> DataFrame:
+    """(a, b, hamming) pairs of the (doc_id, fingerprint...) frame ``fp``
+    that agree on at least one of ``bands`` and lie within
+    ``max_hamming`` bits; ``hamming(a, b)`` is the distance of the two
+    fingerprint structs.
+
+    The fingerprint frame is checkpointed, so the word fold runs once;
+    one posexplode gives the (band_id, band_val) rows that
+    :func:`linking.band_pairs` self-joins, and the fingerprints re-attach
+    to the distinct pairs only.  Precondition: ``doc_id`` is unique per
+    row (a repeated id re-attaches 1:k)."""
+    fp = checkpoint(fp)
+    banded = fp.select("doc_id", F.posexplode(F.array(*bands)).alias("band_id", "band_val"))
+    cands = band_pairs(banded, "doc_id", ["band_id", "band_val"], None).distinct()
+    side = fp.select("doc_id", F.struct(*fp.columns[1:]).alias("fp"))
+    return (
+        _reattach(cands, side, "fp")
+        .select("a", "b", hamming(F.col("fp_a"), F.col("fp_b")).alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
+def _band(col: str, shift: int, bits: int = 16) -> "F.Column":
+    return F.shiftrightunsigned(F.col(col), shift).bitwiseAND(F.lit((1 << bits) - 1))
+
+
+def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3, band_bits: int = 16) -> DataFrame:
+    """Near-dup pairs by SimHash: block on 16-bit bands (any equal band),
+    verify Hamming distance <= max_hamming.  Standard 4-band trick: dups
+    within 3 bits MUST agree on at least one of 4 disjoint 16-bit bands.
+    Precondition: ``doc_id`` is unique per row."""
+    return _simhash_pairs(
+        simhash(docs),
+        [_band("simhash", i * band_bits, band_bits) for i in range(64 // band_bits)],
+        lambda a, b: F.bit_count(a["simhash"].bitwiseXOR(b["simhash"])),
+        max_hamming,
     )
 
 
 def simhash_near_pairs_md5(docs: DataFrame, max_hamming: int = 8) -> DataFrame:
     """DuckDB-checkable twin of :func:`simhash_near_pairs`: 4x16-bit band
-    blocking over the (fp_hi, fp_lo) md5 SimHash, Hamming verify."""
-    sh = simhash_md5(docs)
-    mask = (1 << 16) - 1
-    band_vals = [
-        F.col("fp_lo").bitwiseAND(F.lit(mask)),
-        F.shiftrightunsigned(F.col("fp_lo"), 16).bitwiseAND(F.lit(mask)),
-        F.col("fp_hi").bitwiseAND(F.lit(mask)),
-        F.shiftrightunsigned(F.col("fp_hi"), 16).bitwiseAND(F.lit(mask)),
-    ]
-    stacked = None
-    for i, bv in enumerate(band_vals):
-        part = sh.select(
-            "doc_id", "fp_hi", "fp_lo", F.lit(i).alias("band_id"), bv.alias("band_val")
-        )
-        stacked = part if stacked is None else stacked.unionByName(part)
-    a = stacked.select(
-        F.col("doc_id").alias("a"), F.col("fp_hi").alias("ha"), F.col("fp_lo").alias("la"),
-        "band_id", "band_val",
-    )
-    b = stacked.select(
-        F.col("doc_id").alias("b"), F.col("fp_hi").alias("hb"), F.col("fp_lo").alias("lb"),
-        "band_id", "band_val",
-    )
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))) + F.bit_count(
-        F.col("la").bitwiseXOR(F.col("lb"))
-    )
-    return (
-        a.join(b, ["band_id", "band_val"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", ham.cast("long").alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+    blocking over the (fp_hi, fp_lo) md5 SimHash, Hamming verify.
+    Precondition: ``doc_id`` is unique per row."""
+    return _simhash_pairs(
+        simhash_md5(docs),
+        [_band(half, shift) for half in ("fp_lo", "fp_hi") for shift in (0, 16)],
+        lambda a, b: (
+            F.bit_count(a["fp_hi"].bitwiseXOR(b["fp_hi"]))
+            + F.bit_count(a["fp_lo"].bitwiseXOR(b["fp_lo"]))
+        ).cast("long"),
+        max_hamming,
     )
 
 
@@ -471,15 +413,12 @@ def near_dup_groups(
     cands = minhash_lsh_pairs(
         docs, id_col=id_col, text_col=text_col, hash_fn=hash_fn, n=n, **lsh_kw
     )
-    sh = docs.select(
-        F.col(id_col).alias("_sid"), word_shingles(F.col(text_col), n).alias("_sh")
-    )
+    sh = docs.select(F.col(id_col).alias("doc_id"), word_shingles(F.col(text_col), n).alias("sh"))
     pairs = (
-        cands.join(sh.select(F.col("_sid").alias("a"), F.col("_sh").alias("_sha")), "a")
-        .join(sh.select(F.col("_sid").alias("b"), F.col("_sh").alias("_shb")), "b")
+        _reattach(cands, sh, "sh")
         .filter(
-            F.size(F.array_intersect("_sha", "_shb"))
-            >= F.lit(threshold) * F.size(F.array_union("_sha", "_shb"))
+            F.size(F.array_intersect("sh_a", "sh_b"))
+            >= F.lit(threshold) * F.size(F.array_union("sh_a", "sh_b"))
         )
         .select("a", "b")
     )

@@ -24,8 +24,10 @@ import time
 from collections.abc import Callable
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .. import schemas
 
@@ -139,6 +141,9 @@ class StageRunner:
         stage — mentions/pairs keep ``url``): the written buckets are
         computed from it, so a transform that drops it raises
         ``ValueError``.
+
+        The returned frame reads the stage directory back with the
+        schema in a written file's footer (see :meth:`_read_back`).
         """
         _, ddir, mdir = self._paths(stage)
         self._pin_config(stage, {"n_buckets": self.n_buckets, "key": key, **(config or {})})
@@ -182,7 +187,7 @@ class StageRunner:
                  wall_ms, "done")
                 for b in wave
             ])
-        return self.spark.read.parquet(str(ddir))
+        return self._read_back(ddir, StructField("bucket", IntegerType()))
 
     def run_global(
         self,
@@ -197,17 +202,36 @@ class StageRunner:
         entity canonicalization: LSH pairs span buckets, so per-bucket
         checkpointing would silently drop cross-bucket links).  Resume
         granularity is all-or-nothing for such stages by construction.
+
+        Both a fresh and a skipped run read the output back with
+        :meth:`_read_back`, so a skipped run never calls ``build()``.
         """
         _, ddir, mdir = self._paths(stage)
         self._pin_config(stage, {"global": True, **(config or {})})
         if (ddir / "_SUCCESS").exists():
-            return self.spark.read.parquet(str(ddir))
+            return self._read_back(ddir)
         t0 = time.monotonic()
         obs = Observation()
         build().observe(obs, F.count("*").alias("n")).write.mode("overwrite").parquet(str(ddir))
         wall_ms = int((time.monotonic() - t0) * 1000)
         self._record(mdir, [(stage, -1, "", obs.get["n"], wall_ms, "done")])
-        return self.spark.read.parquet(str(ddir))
+        return self._read_back(ddir)
+
+    def _read_back(self, ddir: Path, *partitions: StructField) -> DataFrame:
+        """Read a stage's written output.  The schema is the one Spark
+        stored in the footer of a written file, plus the ``partitions``
+        columns: Spark's own inference reads that same footer, but in a
+        Spark job of its own (and a user schema is made nullable the way
+        inference makes it).  With no file written there is no footer:
+        the read infers, and Spark refuses an empty directory."""
+        footer = next(ddir.glob("**/*.parquet"), None)
+        if footer is None:
+            return self.spark.read.parquet(str(ddir))
+        stored = pq.read_schema(footer).metadata[b"org.apache.spark.sql.parquet.row.metadata"]
+        schema = StructType.fromJson(json.loads(stored))
+        return self.spark.read.schema(StructType(schema.fields + list(partitions))).parquet(
+            str(ddir)
+        )
 
     def manifest(self, stage: str) -> DataFrame:
         _, _, mdir = self._paths(stage)

@@ -75,6 +75,40 @@ def test_simhash_near_pairs(spark):
     assert (1, 4) in pairs and (1, 3) not in pairs and (2, 3) not in pairs
 
 
+def test_simhash_blocking_finds_every_near_pair(spark):
+    """Blocking recall: the 4x16-bit band join loses no pair.  Fingerprints
+    within 3 bits agree on at least one of 4 disjoint 16-bit bands
+    (pigeonhole), so the banded result equals the all-pairs Hamming <= 3
+    set computed from the same fingerprints."""
+    import random
+
+    rng = random.Random(3)
+    vocab = [f"w{i}" for i in range(400)]
+    rows = []
+    for d in range(8):
+        base = [rng.choice(vocab) for _ in range(60)]
+        rows.append((d * 10, " ".join(base)))
+        for edits in range(1, 5):  # planted near-dups: 1..4 words replaced
+            words = list(base)
+            for _ in range(edits):
+                words[rng.randrange(60)] = rng.choice(vocab)
+            rows.append((d * 10 + edits, " ".join(words)))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    sh = {r.doc_id: r.simhash for r in dedup.simhash(df).collect()}
+    ids = sorted(sh)
+
+    def ham(a, b):
+        return bin((sh[a] ^ sh[b]) & (2**64 - 1)).count("1")
+
+    truth = {
+        (a, b, ham(a, b)) for i, a in enumerate(ids) for b in ids[i + 1 :] if ham(a, b) <= 3
+    }
+    # the fixture reaches every distance the guarantee covers
+    assert {h for _, _, h in truth} == {0, 1, 2, 3}
+    got = {tuple(r) for r in dedup.simhash_near_pairs(df, max_hamming=3).collect()}
+    assert got == truth
+
+
 def test_simhash_matches_python_oracle(spark):
     import ctypes
 

@@ -7,6 +7,8 @@ What is pinned and why (each was a round-1 verdict finding):
   SortAggregate (string buffers force a full sort of every shingle row);
 * minhash_lsh_pairs self-join reads the checkpointed band table, not two
   recomputed signature pipelines (no FileScan below the join);
+* both SimHash pair forms read their input once (the fingerprint frame
+  is checkpointed before the band join);
 * build_nodes' heavy pass over mentions has no SortAggregate;
 * q1 scan prunes columns and pushes the date filter into parquet.
 """
@@ -54,6 +56,25 @@ def test_lsh_pairs_joins_checkpointed_buckets(spark):
     # must scan the materialized band table on both sides, not recompute
     assert "FileScan" not in plan and "SortAggregate" not in plan
     assert plan.count("ExistingRDD") >= 2 or plan.count("LocalTableScan") >= 2
+
+
+def test_simhash_pairs_scan_input_once(spark):
+    """Each SimHash pair form evaluates its input once: the fingerprint
+    frame is checkpointed and the band rows come from one posexplode of
+    it.  A union of one re-derived branch per band evaluated it once per
+    band (4 times; 8 FileScans in the executed plan of a parquet input)."""
+    rows = [(i, f"spark table number {i % 7} holds customer data rows") for i in range(30)]
+    for pairs in (dedup.simhash_near_pairs, dedup.simhash_near_pairs_md5):
+        scanned = spark.sparkContext.accumulator(0)
+
+        def count(row, scanned=scanned):
+            scanned.add(1)
+            return row
+
+        rdd = spark.sparkContext.parallelize(rows, 2).map(count)
+        docs = spark.createDataFrame(rdd, "doc_id long, text string")
+        got = pairs(docs).collect()
+        assert got and scanned.value == len(rows), pairs.__name__
 
 
 def test_linking_lsh_slim_join_and_single_udf_pass(spark):

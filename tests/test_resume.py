@@ -161,13 +161,22 @@ def _jobs(spark):
 def test_bookkeeping_starts_no_read_back_job(spark, tmp_path, monkeypatch):
     """Row counts are observed by the write itself: reading the done
     buckets is one job (the manifest schema is declared, not inferred),
-    and run_global starts no job between its write and its manifest
-    append."""
+    run_global starts no job between its write and its manifest append,
+    and no returned frame, fresh or resumed, infers its schema with a job
+    of its own: each reads with the schema inference would give."""
     runner = StageRunner(spark, str(tmp_path / "wd"), n_buckets=2)
-    runner.run("mentions", _pages(spark, 10), tagging.extract_mentions, key="url")
+    pages = _pages(spark, 10)
+    fresh = runner.run("mentions", pages, tagging.extract_mentions, key="url")
     j0 = _jobs(spark)
     assert runner.completed_buckets("mentions") == {0, 1}
     assert _jobs(spark) - j0 == 1
+    j0 = _jobs(spark)
+    resumed = runner.run("mentions", pages, tagging.extract_mentions, key="url")
+    assert _jobs(spark) - j0 == 1  # completed_buckets only
+    inferred = spark.read.parquet(str(tmp_path / "wd" / "mentions" / "data"))
+    for df in (fresh, resumed):
+        assert df.schema == inferred.schema
+        assert sorted(df.collect()) == sorted(inferred.collect())
 
     def build():
         return spark.range(0, 50, 1, 2)
@@ -182,11 +191,18 @@ def test_bookkeeping_starts_no_read_back_job(spark, tmp_path, monkeypatch):
     def spy(self, mdir, rows):
         at_record.append(_jobs(spark))
         record(self, mdir, rows)
+        at_record.append(_jobs(spark))
 
     monkeypatch.setattr(StageRunner, "_record", spy)
     j0 = _jobs(spark)
-    runner.run_global("g", build)
-    assert at_record == [j0 + write_jobs]
+    g = runner.run_global("g", build)
+    assert at_record == [j0 + write_jobs, _jobs(spark)]
+    j0 = _jobs(spark)
+    skipped = runner.run_global("g", build)
+    assert _jobs(spark) == j0
+    inferred = spark.read.parquet(str(tmp_path / "wd" / "g" / "data"))
+    for df in (g, skipped):
+        assert df.schema == inferred.schema
     assert [tuple(r)[:4] for r in runner.manifest("g").collect()] == [("g", -1, "", 50)]
 
 
