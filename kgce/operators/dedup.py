@@ -165,10 +165,19 @@ def minhash_band_buckets(
     derived from it and the band's bucket expression; the fold and the
     band explode are shared.
     """
-    shingles = word_shingles(F.col(text_col), n)
+    return _minhash_bands(
+        docs.select(F.col(id_col).alias("doc_id"), word_shingles(F.col(text_col), n).alias("sh")),
+        num_hashes,
+        bands,
+        hash_fn,
+    )
+
+
+def _minhash_bands(per_doc: DataFrame, num_hashes: int, bands: int, hash_fn: str) -> DataFrame:
+    """:func:`minhash_band_buckets` of ``per_doc``'s (doc_id, sh) shingle sets."""
     if hash_fn == "xx":
         return _band_buckets(
-            docs.select(F.col(id_col).alias("doc_id"), shingles.alias("_x")),
+            per_doc.select("doc_id", F.col("sh").alias("_x")),
             num_hashes,
             bands,
             F.lit(2**63 - 1),
@@ -176,10 +185,10 @@ def minhash_band_buckets(
             lambda mhs: F.xxhash64(*mhs).cast("string"),
         )
     return _band_buckets(
-        docs.select(
-            F.col(id_col).alias("doc_id"),
+        per_doc.select(
+            "doc_id",
             F.transform(
-                shingles, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
+                "sh", lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
             ).alias("_x"),
         ),
         num_hashes,
@@ -382,11 +391,17 @@ def near_dup_groups(
     hash_fn: str = "xx",
     threshold: float = 0.5,
     n: int = 3,
-    **lsh_kw,
+    num_hashes: int = 8,
+    bands: int = 4,
+    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Full near-duplicate clustering: MinHash-LSH candidate pairs ->
     exact-Jaccard verify -> connected components -> one keeper per
     cluster.
+
+    The per-doc shingle sets are checkpointed once: the band table (as
+    in :func:`minhash_lsh_pairs`), the verify sets and the id list all
+    read that checkpoint, so the input is evaluated once.
 
     The verify step matters: LSH candidates are probabilistic — without
     it, random band collisions between unrelated docs chain clusters
@@ -410,12 +425,13 @@ def near_dup_groups(
 
     from .linking import connected_components
 
-    cands = minhash_lsh_pairs(
-        docs, id_col=id_col, text_col=text_col, hash_fn=hash_fn, n=n, **lsh_kw
+    full = checkpoint(
+        docs.select(F.col(id_col).alias("doc_id"), word_shingles(F.col(text_col), n).alias("sh"))
     )
-    sh = docs.select(F.col(id_col).alias("doc_id"), word_shingles(F.col(text_col), n).alias("sh"))
+    bb = checkpoint(_minhash_bands(full, num_hashes, bands, hash_fn))
+    cands = band_pairs(bb, "doc_id", ["band_id", "bucket"], max_bucket_size).distinct()
     pairs = (
-        _reattach(cands, sh, "sh")
+        _reattach(cands, full, "sh")
         .filter(
             F.size(F.array_intersect("sh_a", "sh_b"))
             >= F.lit(threshold) * F.size(F.array_union("sh_a", "sh_b"))
@@ -426,7 +442,7 @@ def near_dup_groups(
         docs.schema[id_col].dataType, (ByteType, ShortType, IntegerType, LongType)
     )
     if integral:
-        # minhash_lsh_pairs emits (a < b) + distinct; the 1:1 shingle
+        # the candidates are (a < b) + distinct; the 1:1 shingle
         # joins and the Jaccard filter preserve both, and so does the
         # long cast of integral ids — skip CC's re-canonicalization.
         # Precondition: ``id_col`` is unique per row.  A repeated id
@@ -438,7 +454,7 @@ def near_dup_groups(
             pairs.select(F.col("a").cast("long"), F.col("b").cast("long")),
             assume_canonical=True,
         )
-        ids = docs.select(F.col(id_col).cast("long").alias("doc_id"))
+        ids = full.select(F.col("doc_id").cast("long"))
         return (
             ids.join(comps, ids.doc_id == comps.node, "left")
             .select(
@@ -447,9 +463,7 @@ def near_dup_groups(
             )
             .withColumn("keeper", F.col("doc_id") == F.col("group_id"))
         )
-    ids = docs.select(F.col(id_col).alias("doc_id")).withColumn(
-        "node", F.xxhash64(F.col("doc_id").cast("string"))
-    )
+    ids = full.select("doc_id", F.xxhash64(F.col("doc_id").cast("string")).alias("node"))
     comps = connected_components(
         pairs.select(
             F.xxhash64(F.col("a").cast("string")).alias("a"),

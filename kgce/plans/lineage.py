@@ -5,9 +5,12 @@ Every stage run is split into ``n_buckets`` deterministic buckets
 ``<work_dir>/<stage>/data/bucket=<b>/`` and acknowledged by a manifest row
 ``(stage, bucket, input_hash, row_count, wall_ms, status)``
 (:data:`kgce.schemas.STAGE_MANIFEST`) appended to
-``<work_dir>/<stage>/_manifest/``.  A re-run anti-joins the plan against
-the manifest: completed buckets are skipped, so a job killed mid-stage
-resumes where it stopped and produces byte-identical output.
+``<work_dir>/<stage>/_manifest/``.  The manifest is driver-side
+metadata: the driver appends it and reads it back with pyarrow, one
+small parquet file per append, so no Spark job (and no Hadoop
+``chmod`` fork per created file) is spent on it.  A re-run skips the
+buckets the manifest marks done, so a job killed mid-stage resumes
+where it stopped and produces byte-identical output.
 
 A config fingerprint is stored alongside; resuming with a different stage
 configuration aborts — mirroring the reference's label2idx compatibility
@@ -20,16 +23,22 @@ data content (determinism invariant).
 from __future__ import annotations
 
 import json
+import os
 import time
+import uuid
 from collections.abc import Callable
 from pathlib import Path
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .. import schemas
+
+_MANIFEST_ARROW = to_arrow_schema(schemas.STAGE_MANIFEST)
 
 
 class StageConfigMismatch(RuntimeError):
@@ -97,18 +106,28 @@ class StageRunner:
             cfg_file.write_text(cfg_json)
 
     def completed_buckets(self, stage: str) -> set[int]:
+        """Buckets the stage's manifest marks done, read on the driver
+        (pyarrow skips ``_SUCCESS``, ``.crc`` and unfinished appends)."""
         _, _, mdir = self._paths(stage)
-        if not mdir.exists() or not any(mdir.iterdir()):
+        if not any(mdir.glob("*.parquet")):
             return set()
-        m = self.manifest(stage).filter(F.col("status") == "done").select("bucket")
-        return {r.bucket for r in m.collect()}
+        t = pq.read_table(mdir, columns=["bucket", "status"], schema=_MANIFEST_ARROW)
+        return {r["bucket"] for r in t.to_pylist() if r["status"] == "done"}
 
     def _record(self, mdir: Path, rows: list[tuple]) -> None:
         """Append manifest rows: the acknowledgement that a bucket (or a
-        global stage, bucket -1) is done."""
-        self.spark.createDataFrame(rows, schemas.STAGE_MANIFEST).write.mode("append").parquet(
-            str(mdir)
+        global stage, bucket -1) is done.  The driver writes one parquet
+        file under a hidden name and renames it into place, so a killed
+        run leaves no visible partial file: Spark and pyarrow both skip
+        names that start with ``.`` or ``_``."""
+        mdir.mkdir(parents=True, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = mdir / f".{name}.tmp"
+        table = pa.Table.from_pylist(
+            [dict(zip(_MANIFEST_ARROW.names, r)) for r in rows], schema=_MANIFEST_ARROW
         )
+        pq.write_table(table, tmp)
+        os.replace(tmp, mdir / name)
 
     def run(
         self,
@@ -234,6 +253,8 @@ class StageRunner:
         )
 
     def manifest(self, stage: str) -> DataFrame:
+        """The stage's manifest rows as a Spark frame (its callers join
+        and window over it); :meth:`completed_buckets` reads without Spark."""
         _, _, mdir = self._paths(stage)
         return self.spark.read.schema(schemas.STAGE_MANIFEST).parquet(str(mdir))
 

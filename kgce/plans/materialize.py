@@ -1,10 +1,13 @@
 """K6: node/edge table materialization.
 
 Target is Iceberg (``df.writeTo(table).using('iceberg')`` with MERGE-style
-idempotent upserts); this sandbox has no Iceberg runtime jar, so the
-writer falls back to partitioned parquet with deterministic overwrite —
-the same layout an Iceberg table would use, minus the catalog/snapshot
-metadata.  Writes are keyed on natural keys so re-running a completed
+idempotent upserts); without the Iceberg runtime jar the writer falls
+back to a flat parquet overwrite, unpartitioned like the Iceberg
+branch.  The ``bucket`` column stays in the table but names no
+directory: Hadoop's local file system forks a ``chmod`` for each file
+and directory it creates, and 32 bucket directories per table would
+cost ~100 of them (plus a shuffle and a sort on ``bucket``) for a few
+hundred KB.  Writes are keyed on natural keys so re-running a completed
 stage is idempotent.
 """
 
@@ -29,9 +32,7 @@ def write_nodes(nodes: DataFrame, out_dir: str, table: str = "kg.nodes") -> None
     if _iceberg_available(spark):  # pragma: no cover - no iceberg jar in sandbox
         nodes.writeTo(table).using("iceberg").createOrReplace()
         return
-    nodes.repartition(F.col("bucket")).write.mode("overwrite").partitionBy("bucket").parquet(
-        str(Path(out_dir) / "nodes")
-    )
+    nodes.write.mode("overwrite").parquet(str(Path(out_dir) / "nodes"))
 
 
 def write_edges(edges: DataFrame, out_dir: str, table: str = "kg.edges") -> None:
@@ -39,9 +40,7 @@ def write_edges(edges: DataFrame, out_dir: str, table: str = "kg.edges") -> None
     if _iceberg_available(spark):  # pragma: no cover
         edges.writeTo(table).using("iceberg").createOrReplace()
         return
-    edges.repartition(F.col("bucket")).write.mode("overwrite").partitionBy("bucket").parquet(
-        str(Path(out_dir) / "edges")
-    )
+    edges.write.mode("overwrite").parquet(str(Path(out_dir) / "edges"))
 
 
 _SWAP_READY = "_swap_ready"

@@ -43,6 +43,24 @@ def test_pipeline_checkpointed_writes_graph(spark, tmp_path):
     assert m2.filter(F.col("status") == "done").count() == 4
 
 
+def test_node_and_edge_tables_are_written_flat(spark, tmp_path):
+    """write_nodes/write_edges write one flat parquet table each: no
+    ``bucket=`` directory (Hadoop's local file system forks a ``chmod``
+    per file and directory it creates), and the table read back keeps
+    every column, ``bucket`` included, with the written rows."""
+    from kgce.plans import materialize
+
+    out = pipeline.run(_pages(spark, 30, seed=5))
+    materialize.write_nodes(out["nodes"], str(tmp_path))
+    materialize.write_edges(out["edges"], str(tmp_path))
+    for t in ("nodes", "edges"):
+        assert not [p for p in (tmp_path / t).rglob("*") if p.is_dir()], t
+        back = spark.read.parquet(str(tmp_path / t))
+        assert back.columns == out[t].columns
+        assert _table_fingerprint(back) == _table_fingerprint(out[t])
+        assert _table_fingerprint(back)[0] > 0
+
+
 def test_clean_pages_hygiene_pass(spark):
     """Exact dedup keeps the lowest-url copy; boilerplate strip rewrites
     text; decontamination drops pages overlapping the eval set; schema

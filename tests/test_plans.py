@@ -77,6 +77,23 @@ def test_simhash_pairs_scan_input_once(spark):
         assert got and scanned.value == len(rows), pairs.__name__
 
 
+def test_near_dup_groups_scans_input_once(spark):
+    """near_dup_groups checkpoints (doc_id, shingles) once and derives
+    the MinHash bands, the Jaccard verify sets and the id list from it.
+    Deriving each from the input evaluated it 3 times."""
+    rows = [(i, f"spark table number {i % 7} holds customer data rows") for i in range(30)]
+    scanned = spark.sparkContext.accumulator(0)
+
+    def count(row):
+        scanned.add(1)
+        return row
+
+    rdd = spark.sparkContext.parallelize(rows, 2).map(count)
+    got = dedup.near_dup_groups(spark.createDataFrame(rdd, "doc_id long, text string")).collect()
+    assert len(got) == len(rows) and sum(r.keeper for r in got) == 7
+    assert scanned.value == len(rows)
+
+
 def test_linking_lsh_slim_join_and_single_udf_pass(spark):
     """candidate_pairs_lsh and the production path verified_pairs: (1)
     the signed vocab is materialized once — none of its consumers

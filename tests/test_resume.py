@@ -160,8 +160,9 @@ def _jobs(spark):
 
 def test_bookkeeping_starts_no_read_back_job(spark, tmp_path, monkeypatch):
     """Row counts are observed by the write itself: reading the done
-    buckets is one job (the manifest schema is declared, not inferred),
-    run_global starts no job between its write and its manifest append,
+    buckets starts no job (the driver reads the manifest with pyarrow),
+    so neither does resuming a complete stage; run_global starts no job
+    between its write and its manifest append,
     and no returned frame, fresh or resumed, infers its schema with a job
     of its own: each reads with the schema inference would give."""
     runner = StageRunner(spark, str(tmp_path / "wd"), n_buckets=2)
@@ -169,10 +170,9 @@ def test_bookkeeping_starts_no_read_back_job(spark, tmp_path, monkeypatch):
     fresh = runner.run("mentions", pages, tagging.extract_mentions, key="url")
     j0 = _jobs(spark)
     assert runner.completed_buckets("mentions") == {0, 1}
-    assert _jobs(spark) - j0 == 1
-    j0 = _jobs(spark)
+    assert _jobs(spark) == j0
     resumed = runner.run("mentions", pages, tagging.extract_mentions, key="url")
-    assert _jobs(spark) - j0 == 1  # completed_buckets only
+    assert _jobs(spark) == j0
     inferred = spark.read.parquet(str(tmp_path / "wd" / "mentions" / "data"))
     for df in (fresh, resumed):
         assert df.schema == inferred.schema
@@ -204,6 +204,30 @@ def test_bookkeeping_starts_no_read_back_job(spark, tmp_path, monkeypatch):
     for df in (g, skipped):
         assert df.schema == inferred.schema
     assert [tuple(r)[:4] for r in runner.manifest("g").collect()] == [("g", -1, "", 50)]
+
+
+def test_manifest_reads_spark_written_and_driver_appended_rows(spark, tmp_path):
+    """A work directory whose manifest Spark appended to (``_SUCCESS``
+    and ``.crc`` files beside the part file) still resumes: the driver
+    append starts no Spark job, and both reads return every row while
+    skipping a stray hidden file an interrupted append left behind."""
+    runner = StageRunner(spark, str(tmp_path / "wd"), n_buckets=4)
+    _, _, mdir = runner._paths("s")
+    spark.createDataFrame(
+        [("s", 0, "00", 3, 10, "done"), ("s", 1, "01", 0, 10, "failed")], schemas.STAGE_MANIFEST
+    ).write.mode("append").parquet(str(mdir))
+    assert (mdir / "_SUCCESS").exists() and list(mdir.glob(".*.crc"))
+    j0 = _jobs(spark)
+    runner._record(mdir, [("s", 1, "01", 5, 20, "done"), ("s", 2, "02", 7, 20, "done")])
+    assert _jobs(spark) == j0
+    (mdir / ".part-interrupted.parquet.tmp").write_bytes(b"PAR1 not a whole file")
+    assert runner.completed_buckets("s") == {0, 1, 2}
+    assert sorted(tuple(r) for r in runner.manifest("s").collect()) == [
+        ("s", 0, "00", 3, 10, "done"),
+        ("s", 1, "01", 0, 10, "failed"),
+        ("s", 1, "01", 5, 20, "done"),
+        ("s", 2, "02", 7, 20, "done"),
+    ]
 
 
 _KILLED_RUN = """
